@@ -106,7 +106,11 @@ _NEVER_DRIVER_VERIFIED = [
     # configuration) — identical arithmetic (sequential composition),
     # half the schedule syncs; the loop materializes at construction so
     # the ledger hash cannot see it, queued explicitly (sf0.01 oracle
-    # parity re-verified green before queueing)
+    # parity re-verified green before queueing). Both stay queued for
+    # the driver-side solve (operators/graph.py _solve_on_driver): a
+    # graph of at most SMALL_GRAPH_EDGE_LIMIT distinct edges is solved
+    # on the driver, bit-identical ranks (tests/test_graph.py lock),
+    # and the output becomes a local relation — a new plan
     "crawl_pagerank",
     "graph_influence_ppr",
     # --- (c) hyperplane banding kernel (operators/dedup.py

@@ -10,12 +10,27 @@ iteration, no driver-side graph state. A hub page with millions of
 in-links is one hot groupBy key; AQE skew splitting handles it the
 same way it does a hot join key. ``localCheckpoint`` per iteration
 truncates the lineage exactly as the closure operators do.
+
+Small graphs skip the loop: at or below ``SMALL_GRAPH_EDGE_LIMIT``
+distinct edges (the gate the closure operators already use),
+``pagerank`` and ``personalized_pagerank`` collect the edge list once
+and replay the same rounds on the driver, bit-identical to the
+distributed loop (``_solve_on_driver``). There every round is a
+few milliseconds of arithmetic, against several Spark jobs,
+checkpoints and schedule syncs in the loop.
 """
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Context, Decimal
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
+
+from crawler_spark.operators.dedup import SMALL_GRAPH_EDGE_LIMIT
 
 
 def _exact_sum(c: Column | str) -> Column:
@@ -49,6 +64,319 @@ def _exact_sum(c: Column | str) -> Column:
     NULL-preserving like ``F.sum``."""
     col = F.col(c) if isinstance(c, str) else c
     return F.sum(col.cast("decimal(38,18)")).cast("double")
+
+
+# _exact_sum replayed on the driver: each DECIMAL(38,18) term as an
+# exact integer count of 1e-18
+_UNITS = 10 ** 18
+_Q18 = Decimal("1e-18")
+_DEC38 = Context(prec=38, rounding=ROUND_HALF_UP)
+
+
+def _decimal_units(spark, xs) -> list[int]:
+    """Spark's ``CAST(x AS DECIMAL(38,18))`` of each double in ``xs``,
+    as an integer count of 1e-18: the terms ``_exact_sum`` adds. Their
+    integer sum divided by ``_UNITS`` (Python's int/int division is
+    correctly rounded, and so is Spark's decimal-to-double cast)
+    replays ``_exact_sum`` bit for bit.
+
+    Spark turns a double into a decimal through the JVM's
+    ``Double.toString`` and then rounds HALF_UP. The digits must come
+    from that same method: on JDK 17 it is not always the shortest
+    form Python's ``repr`` prints (2.82879384806159e17 becomes
+    2.82879384806159008E17). So the doubles cross to the driver JVM as
+    one byte array and their strings come back as one
+    ``Arrays.toString`` — a few Py4J calls, no Spark job. Locked
+    against Spark's cast by tests/test_graph.py."""
+    if len(xs) == 0:
+        return []
+    sc = spark.sparkContext
+    arr = sc._gateway.new_array(sc._jvm.double, len(xs))
+    sc._jvm.java.nio.ByteBuffer.wrap(
+        np.asarray(xs, dtype=">f8").tobytes()
+    ).asDoubleBuffer().get(arr)
+    text = sc._jvm.java.util.Arrays.toString(arr)
+    return [
+        int(_DEC38.quantize(Decimal(s), _Q18).scaleb(18, _DEC38))
+        for s in text[1:-1].split(", ")
+    ]
+
+
+def _rank_update(in_mass, dmass, damping: float, n: int | None, p):
+    """One round's new rank from the in-link mass ``in_mass`` and the
+    dangling mass ``dmass`` (None when no node is dangling). ``p`` is
+    the per-node teleport probability, or None for the uniform 1/n.
+    Written once for Spark Columns and numpy arrays alike, so both
+    paths apply the same IEEE double operations in the same order."""
+    if p is None:
+        inner = in_mass if dmass is None else in_mass + dmass / n
+        return (1.0 - damping) / n + damping * inner
+    inner = in_mass if dmass is None else in_mass + dmass * p
+    return (1.0 - damping) * p + damping * inner
+
+
+def _solve_on_driver(
+    pdf: pd.DataFrame,
+    nodes: DataFrame,
+    seed_ids: DataFrame | None,
+    damping: float,
+    iterations: int,
+    tol: float,
+    check_every: int,
+) -> tuple[DataFrame, int]:
+    """``_distributed_loop`` replayed on the driver over ``pdf``, the
+    collected distinct (src, dst) edges: the small-graph path. Every
+    reduction is ``_exact_sum``'s — each term quantized
+    by ``_decimal_units``, summed as integers, cast back once — and
+    the rest of a round is ``_rank_update``, so ranks and the
+    iteration count are bit-identical to the distributed path (locked
+    by tests/test_graph.py). A node's term ``rank/deg`` is the same on
+    every out-edge, so it is quantized once per node and summed per
+    destination with ``np.add.reduceat``; the total mass is ≤ 1, far
+    inside int64. The delta check keeps the loop's cadence: every
+    ``check_every`` rounds, never on the final round.
+
+    Spark work besides the caller's edge collect: for PPR one collect
+    of at most n + 1 distinct seeds (n = node count); only when there
+    are more seeds than nodes, the seeds that are nodes are selected
+    in Spark instead. The output is a local frame built from the
+    result. Returns (unrounded (id, rank), rounds run).
+    """
+    spark = nodes.sparkSession
+    codes, ids = pd.factorize(
+        pd.concat([pdf["src"], pdf["dst"]], ignore_index=True))
+    m, n = len(pdf), len(ids)
+    src, dst = codes[:m], codes[m:]
+    schema = StructType([
+        StructField("id", nodes.schema["id"].dataType),
+        StructField("rank", DoubleType()),
+    ])
+
+    def result(rank, rounds: int) -> tuple[DataFrame, int]:
+        out = pd.DataFrame({"id": ids, "rank": rank})
+        return spark.createDataFrame(out, schema), rounds
+
+    if n == 0:
+        return result(np.zeros(0), 0)
+    if seed_ids is None:
+        p = None
+        rank = np.full(n, 1.0 / n)
+    else:
+        in_graph = seed_ids.limit(n + 1).toPandas()["id"]
+        if len(in_graph) > n:
+            in_graph = nodes.join(seed_ids, "id", "semi").toPandas()["id"]
+        is_seed = np.asarray(ids.isin(in_graph))
+        s = int(is_seed.sum())
+        if s == 0:
+            return result(np.zeros(n), 0)
+        p = np.where(is_seed, 1.0 / s, 0.0)
+        rank = p
+
+    deg = np.bincount(src, minlength=n)
+    has_out = np.flatnonzero(deg)
+    dangling = np.flatnonzero(deg == 0)
+    by_dst = np.argsort(dst, kind="stable")
+    in_src = src[by_dst]
+    targets, starts = np.unique(dst[by_dst], return_index=True)
+
+    def one_round(r):
+        c = np.zeros(n, dtype=np.int64)
+        c[has_out] = _decimal_units(spark, r[has_out] / deg[has_out])
+        in_mass = np.zeros(n)
+        in_mass[targets] = [
+            int(u) / _UNITS for u in np.add.reduceat(c[in_src], starts)
+        ]
+        dmass = (
+            sum(_decimal_units(spark, r[dangling])) / _UNITS
+            if len(dangling) else None
+        )
+        return _rank_update(in_mass, dmass, damping, n, p)
+
+    rounds = 0
+    while rounds < iterations:
+        prev, rank = rank, one_round(rank)
+        rounds += 1
+        if tol > 0 and rounds < iterations and rounds % check_every == 0:
+            delta = sum(_decimal_units(spark, np.abs(rank - prev))) / _UNITS
+            if delta < tol:
+                break
+    return result(rank, rounds)
+
+
+def _distributed_loop(
+    e: DataFrame,
+    n_edges: int,
+    frame: DataFrame,
+    ranks: DataFrame,
+    damping: float,
+    n: int | None,
+    p: Column | None,
+    iterations: int,
+    tol: float,
+    check_every: int,
+) -> tuple[DataFrame, int]:
+    """The distributed power iteration shared by ``pagerank`` and
+    ``personalized_pagerank``: ``frame`` is the checkpointed node
+    frame (``id``, plus the teleport column ``p`` for PPR), ``ranks``
+    the starting (id, rank) frame. Returns (unrounded ranks, rounds
+    run)."""
+    # Round-12 loop restructure (guide §2.4 — remove per-round
+    # recomputation): degrees are joined into the edge list ONCE and
+    # checkpointed, instead of re-aggregating out_deg from e inside
+    # every iteration's contribs subtree AND its dangling anti-join;
+    # the dangling-node set is likewise computed once — when it is
+    # empty (e.g. any symmetrized graph) the per-round dangling-mass
+    # aggregate + broadcast disappear entirely (dmass is exactly 0.0
+    # either way, so ranks are bit-identical).
+    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    ed = e.join(out_deg, "src").localCheckpoint(eager=True)
+    dang_ids = (
+        frame.select("id")
+        .join(out_deg, F.col("id") == out_deg.src, "left_anti")
+        .localCheckpoint(eager=True)
+    )
+    n_dang = dang_ids.count()
+    iters_run = 0
+    # loop shuffles carry node/edge-cardinality frames of two narrow
+    # columns: size them to the measured edge count, not a constant
+    # (guide §2 — scale-adaptive; decimal-exact sums keep every rank
+    # bit-identical under ANY partitioning, so this is value-free)
+    from crawler_spark.session import loop_conf
+
+    spark = e.sparkSession
+    # shrunk-regime decision + conf save/restore centralized in
+    # session.loop_conf (round 13 — see its docstring for the regime
+    # rationale and the single-threaded-session assumption)
+    with loop_conf(spark, n_edges) as (_loop_parts, shrunk):
+
+        def one_round(r: DataFrame) -> DataFrame:
+            contribs = (
+                ed.join(r.withColumnRenamed("id", "src"), "src")
+                .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
+                .groupBy("dst")
+                .agg(_exact_sum("c").alias("in_mass"))
+            )
+            joined = frame.join(contribs, frame.id == contribs.dst, "left")
+            in_mass = F.coalesce(F.col("in_mass"), F.lit(0.0))
+            if not n_dang:
+                return joined.select("id", _rank_update(
+                    in_mass, None, damping, n, p).alias("rank"))
+            # dangling mass stays IN the plan as a broadcast 1-row
+            # frame — a driver-side .first() here would add a
+            # synchronizing job per iteration; the semi-join against
+            # the precomputed dangling set selects exactly the rows
+            # the old per-round anti-join did
+            dang = (
+                r.join(dang_ids, "id", "semi")
+                .agg(F.coalesce(_exact_sum("rank"), F.lit(0.0))
+                     .alias("dmass"))
+            )
+            return joined.crossJoin(F.broadcast(dang)).select(
+                "id", _rank_update(
+                    in_mass, F.col("dmass"), damping, n, p).alias("rank"))
+
+        # a SHRUNK loop composes 2 rounds lazily per eager checkpoint
+        # (the canonical_closure stretch trade, round 13): the
+        # checkpoint+schedule sync dominates a tiny round, and the
+        # composed plan is exactly the sequential arithmetic — ONLY
+        # when the tol check is provably dead for this run (tol<=0, or
+        # check_every >= iterations which the skip-final-round rule
+        # already disables — the fixture callers' configuration), so
+        # the delta-check cadence and early-exit semantics of
+        # tol-driven callers are untouched. Full-scale loops keep
+        # stretch 1: there each round is a real shuffle pass.
+        stretch = (
+            2 if shrunk and (tol <= 0 or check_every >= iterations) else 1
+        )
+        while iters_run < iterations:
+            prev = ranks
+            steps = min(stretch, iterations - iters_run)
+            new_ranks = ranks
+            for _ in range(steps):
+                new_ranks = one_round(new_ranks)
+            ranks = new_ranks.localCheckpoint(eager=True)
+            iters_run += steps
+            # no delta on the FINAL round: the loop ends either way,
+            # so the check's only effect would be one wasted
+            # synchronizing join job (round-12)
+            if tol > 0 and iters_run < iterations and (
+                iters_run % check_every == 0
+            ):
+                delta = (
+                    ranks.join(
+                        prev.withColumnRenamed("rank", "prev_rank"), "id")
+                    .agg(_exact_sum(
+                        F.abs(F.col("rank") - F.col("prev_rank")))
+                        .alias("d"))
+                    .first()["d"]
+                )
+                if delta is not None and delta < tol:
+                    break
+    return ranks, iters_run
+
+
+def _link_ranks(
+    edges: DataFrame,
+    seeds: DataFrame | None,
+    damping: float,
+    iterations: int,
+    src_col: str,
+    dst_col: str,
+    tol: float,
+    stats: dict | None,
+    check_every: int,
+    init_ranks: DataFrame | None = None,
+) -> DataFrame:
+    """Unrounded (id, rank) of ``pagerank`` (``seeds`` None) or
+    ``personalized_pagerank``: collapse the edges, then take the
+    driver path when the distinct edge count is at or below
+    ``SMALL_GRAPH_EDGE_LIMIT`` and no warm start is given (the
+    ``init_ranks`` pre-scale is an order-dependent double sum, so it
+    stays in Spark), else the distributed loop. ``stats`` receives
+    ``iterations_run`` and ``path`` ("driver" | "distributed")."""
+    # lazy checkpoint: the first action materializes it, running the
+    # (possibly heavy) upstream edge projection once; everything after
+    # reads the checkpointed two-column frame
+    e = (
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    # the gate is one bounded collect: a small graph's whole edge list,
+    # or one row past the limit, which sends it down the Spark loop.
+    # The dup-closure limit holds here too — measured at 100k edges on
+    # 2 cores (tools/bench_link_gate.py): driver path 2.7 s against
+    # 11.6 s distributed for PageRank, 3.0 s against 13.3 s for PPR;
+    # a graph above the limit pays ~0.2 s for the wasted collect
+    limit = SMALL_GRAPH_EDGE_LIMIT
+    pdf = e.limit(limit + 1).toPandas() if init_ranks is None else None
+    nodes = (
+        e.select(F.col("src").alias("id"))
+        .unionByName(e.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+    seed_ids = None if seeds is None else (
+        seeds.select(F.col(seeds.columns[0]).alias("id")).distinct())
+    check_every = max(1, int(check_every))
+    if pdf is not None and len(pdf) <= limit:
+        path = "driver"
+        ranks, iters_run = _solve_on_driver(
+            pdf, nodes, seed_ids, damping, iterations, tol, check_every)
+    elif seed_ids is None:
+        path = "distributed"
+        ranks, iters_run = _pagerank_distributed(
+            e, e.count(), nodes, damping, iterations, tol, check_every,
+            init_ranks)
+    else:
+        path = "distributed"
+        ranks, iters_run = _ppr_distributed(
+            e, e.count(), nodes, seed_ids, damping, iterations, tol,
+            check_every)
+    if stats is not None:
+        stats["iterations_run"] = iters_run
+        stats["path"] = path
+    return ranks
 
 
 def pagerank(
@@ -85,8 +413,15 @@ def pagerank(
     exactly that. ``tol=1e-7`` is an order below the 6-decimal output
     rounding, so converged-early and fixed-count results are identical
     after rounding. Pass a dict as ``stats`` to receive
-    ``{"iterations_run": k}`` back (observability for the early exit;
-    the DataFrame itself can't carry it).
+    ``{"iterations_run": k, "path": "driver" | "distributed"}`` back
+    (observability for the early exit and the small-graph gate; the
+    DataFrame itself can't carry them).
+
+    A graph of at most ``SMALL_GRAPH_EDGE_LIMIT`` distinct edges is
+    solved on the driver (``_solve_on_driver``): same ranks to the
+    last bit, same ``iterations_run``, one edge collect instead of a
+    Spark loop. Larger graphs, and warm starts, take the distributed
+    loop.
 
     ``init_ranks`` ((id, rank) frame) WARM-STARTS the iteration — the
     incremental-recrawl path: after a delta of new edges/pages lands,
@@ -109,38 +444,26 @@ def pagerank(
     the 6-decimal rounded output, are unchanged. A seed vector summing
     to ≤ 0 falls back to the uniform start.
     """
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    return _link_ranks(
+        edges, None, damping, iterations, src_col, dst_col, tol, stats,
+        check_every, init_ranks,
+    ).select("id", F.round("rank", 6).alias("rank"))
+
+
+def _pagerank_distributed(
+    e: DataFrame,
+    n_edges: int,
+    nodes: DataFrame,
+    damping: float,
+    iterations: int,
+    tol: float,
+    check_every: int,
+    init_ranks: DataFrame | None,
+) -> tuple[DataFrame, int]:
+    nodes = nodes.localCheckpoint(eager=True)
     n = nodes.count()
     if n == 0:
-        return nodes.select("id", F.lit(0.0).alias("rank"))
-    # Round-12 loop restructure (guide §2.4 — remove per-round
-    # recomputation): degrees are joined into the edge list ONCE and
-    # checkpointed, instead of re-aggregating out_deg from e inside
-    # every iteration's contribs subtree AND its dangling anti-join;
-    # the dangling-node set is likewise computed once — when it is
-    # empty (e.g. any symmetrized graph) the per-round dangling-mass
-    # aggregate + broadcast disappear entirely (dmass is exactly 0.0
-    # either way, so ranks are bit-identical).
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    ed = e.join(out_deg, "src").localCheckpoint(eager=True)
-    dang_ids = (
-        nodes.join(out_deg, nodes.id == out_deg.src, "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    n_dang = dang_ids.count()
-    base = (1.0 - damping) / n
-
+        return nodes.select("id", F.lit(0.0).alias("rank")), 0
     if init_ranks is None:
         ranks = nodes.select("id", F.lit(1.0 / n).alias("rank"))
     else:
@@ -181,100 +504,9 @@ def pagerank(
             ).otherwise(F.lit(1.0 / n)).alias("rank"))
             .localCheckpoint(eager=True)
         )
-    iters_run = 0
-    check_every = max(1, int(check_every))
-    # loop shuffles carry node/edge-cardinality frames of two narrow
-    # columns: size them to the measured edge count, not a constant
-    # (guide §2 — scale-adaptive; decimal-exact sums keep every rank
-    # bit-identical under ANY partitioning, so this is value-free)
-    from crawler_spark.session import loop_conf
-
-    spark = edges.sparkSession
-    # shrunk-regime decision + conf save/restore centralized in
-    # session.loop_conf (round 13 — see its docstring for the regime
-    # rationale and the single-threaded-session assumption)
-    with loop_conf(spark, ed.count()) as (_loop_parts, shrunk):
-
-        def one_round(r: DataFrame) -> DataFrame:
-            contribs = (
-                ed.join(r.withColumnRenamed("id", "src"), "src")
-                .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-                .groupBy("dst")
-                .agg(_exact_sum("c").alias("in_mass"))
-            )
-            nr = nodes.join(contribs, nodes.id == contribs.dst, "left")
-            if n_dang:
-                # dangling mass stays IN the plan as a broadcast 1-row
-                # frame — a driver-side .first() here would add a
-                # synchronizing job per iteration; the semi-join
-                # against the precomputed dangling set selects exactly
-                # the rows the old per-round anti-join did
-                dang = (
-                    r.join(dang_ids, "id", "semi")
-                    .agg(F.coalesce(_exact_sum("rank"), F.lit(0.0))
-                         .alias("dmass"))
-                )
-                return (
-                    nr.crossJoin(F.broadcast(dang))
-                    .select(
-                        "id",
-                        (
-                            F.lit(base)
-                            + F.lit(damping)
-                            * (F.coalesce(F.col("in_mass"), F.lit(0.0))
-                               + F.col("dmass") / n)
-                        ).alias("rank"),
-                    )
-                )
-            return nr.select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * F.coalesce(F.col("in_mass"), F.lit(0.0))
-                ).alias("rank"),
-            )
-
-        # a SHRUNK loop composes 2 rounds lazily per eager checkpoint
-        # (the canonical_closure stretch trade, round 13): the
-        # checkpoint+schedule sync dominates a tiny round, and the
-        # composed plan is exactly the sequential arithmetic — ONLY
-        # when the tol check is provably dead for this run (tol<=0, or
-        # check_every >= iterations which the skip-final-round rule
-        # already disables — the fixture callers' configuration), so
-        # the delta-check cadence and early-exit semantics of
-        # tol-driven callers are untouched. Full-scale loops keep
-        # stretch 1: there each round is a real shuffle pass.
-        stretch = (
-            2 if shrunk and (tol <= 0 or check_every >= iterations) else 1
-        )
-        while iters_run < iterations:
-            prev = ranks
-            steps = min(stretch, iterations - iters_run)
-            new_ranks = ranks
-            for _ in range(steps):
-                new_ranks = one_round(new_ranks)
-            ranks = new_ranks.localCheckpoint(eager=True)
-            iters_run += steps
-            # no delta on the FINAL round: the loop ends either way,
-            # so the check's only effect would be one wasted
-            # synchronizing join job (round-12)
-            if tol > 0 and iters_run < iterations and (
-                iters_run % check_every == 0
-            ):
-                delta = (
-                    ranks.join(
-                        prev.withColumnRenamed("rank", "prev_rank"), "id")
-                    .agg(_exact_sum(
-                        F.abs(F.col("rank") - F.col("prev_rank")))
-                        .alias("d"))
-                    .first()["d"]
-                )
-                if delta is not None and delta < tol:
-                    break
-    if stats is not None:
-        stats["iterations_run"] = iters_run
-    return ranks.select("id", F.round("rank", 6).alias("rank"))
+    return _distributed_loop(
+        e, n_edges, nodes, ranks, damping, n, None, iterations, tol,
+        check_every)
 
 
 def hits(
@@ -639,7 +871,8 @@ def personalized_pagerank(
     pages like these, rank users by influence on this cohort, expand
     a seed list of known-good domains. ``seeds`` is a one-column
     (id) DataFrame; seeds absent from the graph are ignored, and the
-    teleport weight is uniform over the surviving seed set.
+    teleport weight is uniform over the surviving seed set. When no
+    seed is a node of the graph, every node gets rank 0.0.
 
     Same distributed loop as ``pagerank`` (one edges⨝ranks join plus
     one groupBy per round, dangling mass as an in-plan broadcast
@@ -647,128 +880,49 @@ def personalized_pagerank(
     the per-node teleport probability is a COLUMN carried on the rank
     frame, not a literal — dangling and teleport mass flow to the
     seeds, so mass conservation holds and unreachable nodes converge
-    to exactly 0.
+    to exactly 0. Small graphs take the same bit-identical driver path
+    as ``pagerank``.
 
-    ``check_every``/``tol`` behave exactly as in ``pagerank``,
-    including the caveat there: the delta is never checked on the
-    final round, so ``check_every >= iterations`` disables the tol
-    early-exit entirely (deliberate for the fixture-scale callers).
+    ``check_every``/``tol``/``stats`` behave exactly as in
+    ``pagerank``, including the caveat there: the delta is never
+    checked on the final round, so ``check_every >= iterations``
+    disables the tol early-exit entirely (deliberate for the
+    fixture-scale callers).
     """
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    seed_ids = seeds.select(F.col(seeds.columns[0]).alias("id")).distinct()
+    return _link_ranks(
+        edges, seeds, damping, iterations, src_col, dst_col, tol, stats,
+        check_every,
+    ).select("id", F.round("rank", 6).alias("rank"))
+
+
+def _ppr_distributed(
+    e: DataFrame,
+    n_edges: int,
+    nodes: DataFrame,
+    seed_ids: DataFrame,
+    damping: float,
+    iterations: int,
+    tol: float,
+    check_every: int,
+) -> tuple[DataFrame, int]:
     p = (
         nodes.join(seed_ids.withColumn("is_seed", F.lit(1)), "id", "left")
         .select("id", F.coalesce("is_seed", F.lit(0)).alias("is_seed"))
     )
     n_seeds = p.agg(F.sum("is_seed").alias("s"))
+    # s > 0 guard: with no seed in the graph the teleport vector is
+    # all 0.0 (ANSI would raise DIVIDE_BY_ZERO on is_seed / 0)
     p = (
         p.crossJoin(F.broadcast(n_seeds))
-        .select("id", (F.col("is_seed") / F.col("s")).alias("p"))
+        .select("id", F.when(
+            F.col("s") > 0, F.col("is_seed") / F.col("s")
+        ).otherwise(F.lit(0.0)).alias("p"))
         .localCheckpoint(eager=True)
     )
-    if p.count() == 0 or p.agg(F.sum("p")).first()[0] is None:
-        return p.select("id", F.lit(0.0).alias("rank"))
-    # same round-12 loop restructure as ``pagerank`` (guide §2.4):
-    # degrees pre-joined into the edge list once, dangling set
-    # computed once (a symmetrized graph has none, so the per-round
-    # dangling aggregate + broadcast vanish — dmass is exactly 0.0
-    # either way), loop shuffles sized to the measured edge count
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    ed = e.join(out_deg, "src").localCheckpoint(eager=True)
-    dang_ids = (
-        p.select("id").join(out_deg, F.col("id") == out_deg.src, "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    n_dang = dang_ids.count()
-
-    ranks = p.select("id", F.col("p").alias("rank"))
-    iters_run = 0
-    check_every = max(1, int(check_every))
-    from crawler_spark.session import loop_conf
-
-    spark = edges.sparkSession
-    # shrunk-regime decision + conf save/restore centralized in
-    # session.loop_conf (round 13 — see its docstring for the regime
-    # rationale and the single-threaded-session assumption)
-    with loop_conf(spark, ed.count()) as (_loop_parts, shrunk):
-
-        def one_round(r: DataFrame) -> DataFrame:
-            contribs = (
-                ed.join(r.withColumnRenamed("id", "src"), "src")
-                .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-                .groupBy("dst")
-                .agg(_exact_sum("c").alias("in_mass"))
-            )
-            joined = p.join(contribs, p.id == contribs.dst, "left")
-            if n_dang:
-                dang = (
-                    r.join(dang_ids, "id", "semi")
-                    .agg(F.coalesce(_exact_sum("rank"), F.lit(0.0))
-                         .alias("dmass"))
-                )
-                return (
-                    joined.crossJoin(F.broadcast(dang))
-                    .select(
-                        "id",
-                        (
-                            F.lit(1.0 - damping) * F.col("p")
-                            + F.lit(damping)
-                            * (F.coalesce(F.col("in_mass"), F.lit(0.0))
-                               + F.col("dmass") * F.col("p"))
-                        ).alias("rank"),
-                    )
-                )
-            return joined.select(
-                "id",
-                (
-                    F.lit(1.0 - damping) * F.col("p")
-                    + F.lit(damping)
-                    * F.coalesce(F.col("in_mass"), F.lit(0.0))
-                ).alias("rank"),
-            )
-
-        # same guarded stretch as ``pagerank`` (round 13): compose 2
-        # rounds per eager checkpoint only when the loop is shrunk AND
-        # the tol check is provably dead for this run — identical
-        # arithmetic, half the schedule syncs; tol-driven callers keep
-        # the per-round cadence
-        stretch = (
-            2 if shrunk and (tol <= 0 or check_every >= iterations) else 1
-        )
-        while iters_run < iterations:
-            prev = ranks
-            steps = min(stretch, iterations - iters_run)
-            new_ranks = ranks
-            for _ in range(steps):
-                new_ranks = one_round(new_ranks)
-            ranks = new_ranks.localCheckpoint(eager=True)
-            iters_run += steps
-            # no delta on the FINAL round: the loop ends either way,
-            # so the check's only effect would be one wasted
-            # synchronizing join job (round-12)
-            if tol > 0 and iters_run < iterations and (
-                iters_run % check_every == 0
-            ):
-                delta = (
-                    ranks.join(
-                        prev.withColumnRenamed("rank", "prev_rank"), "id")
-                    .agg(_exact_sum(
-                        F.abs(F.col("rank") - F.col("prev_rank")))
-                        .alias("d"))
-                    .first()["d"]
-                )
-                if delta is not None and delta < tol:
-                    break
-    if stats is not None:
-        stats["iterations_run"] = iters_run
-    return ranks.select("id", F.round("rank", 6).alias("rank"))
+    # no seed in the graph (teleport mass 0.0) or no graph at all
+    # (NULL): every rank is 0.0, nothing to iterate
+    if not p.agg(F.sum("p")).first()[0]:
+        return p.select("id", F.lit(0.0).alias("rank")), 0
+    return _distributed_loop(
+        e, n_edges, p, p.select("id", F.col("p").alias("rank")), damping,
+        None, F.col("p"), iterations, tol, check_every)

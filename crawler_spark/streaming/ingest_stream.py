@@ -642,19 +642,21 @@ def make_batch_processor(
         touched = [r["bucket"] for r in pages.select("bucket").distinct().collect()]
         manifest = read_manifest(pages_dir)
         live_touched = {b: manifest[b] for b in touched if b in manifest}
-        if live_touched:
-            # read ONLY the touched buckets' live version directories
-            # (read_buckets: mergeSchema honors additive evolution)
-            existing = read_buckets(spark, pages_dir, live_touched)
-            pages = merge_by_key(existing, pages, key="url",
-                                 recency_col="last_crawled")
-            if any(e == epoch for e in live_touched.values()):
-                # replay of an epoch that already committed (crash fell
-                # between manifest commit and checkpoint commit): the
-                # merge reads the very v=<epoch> directory the write
-                # below rewrites — break lineage so the read finishes
-                # before the overwrite
-                pages = pages.localCheckpoint(eager=True)
+        # read ONLY the touched buckets' live version directories
+        # (read_buckets: mergeSchema honors additive evolution); with
+        # none live the merge still runs against an empty table, so a
+        # url the batch holds twice is stored once
+        existing = (read_buckets(spark, pages_dir, live_touched)
+                    if live_touched else pages.limit(0))
+        pages = merge_by_key(existing, pages, key="url",
+                             recency_col="last_crawled")
+        if any(e == epoch for e in live_touched.values()):
+            # replay of an epoch that already committed (crash fell
+            # between manifest commit and checkpoint commit): the
+            # merge reads the very v=<epoch> directory the write
+            # below rewrites — break lineage so the read finishes
+            # before the overwrite
+            pages = pages.localCheckpoint(eager=True)
         # stage into the NEW v=<epoch> directory — live data is never
         # mutated, so no lineage break is needed (the merge reads old
         # versions, the write targets a fresh one) and a crash here

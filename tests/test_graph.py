@@ -1,10 +1,30 @@
 """PageRank operator tests: closed-form graphs, a pure-Python power
 iteration as the value oracle, and mass conservation with dangling
-nodes."""
+nodes. The PageRank and PPR tests run on both solver paths — the
+driver-side solve the small-graph gate picks for these graphs, and the
+distributed loop, forced by setting the gate to 0 edges."""
 
 from __future__ import annotations
 
+import pytest
+
+import crawler_spark.operators.graph as graph_ops
 from crawler_spark.operators.graph import pagerank
+
+PATHS = ("driver", "distributed")
+
+
+@pytest.fixture
+def use_path(monkeypatch):
+    """``use_path(p)`` routes pagerank / personalized_pagerank to solver
+    path ``p`` for the rest of the test: "distributed" sets the
+    small-graph gate to 0 edges, "driver" restores it."""
+    limit = graph_ops.SMALL_GRAPH_EDGE_LIMIT
+
+    def use(path: str) -> None:
+        monkeypatch.setattr(graph_ops, "SMALL_GRAPH_EDGE_LIMIT",
+                            limit if path == "driver" else 0)
+    return use
 
 
 def _py_pagerank(edges, d=0.85, iters=10):
@@ -24,32 +44,47 @@ def _py_pagerank(edges, d=0.85, iters=10):
     return {v: round(x, 6) for v, x in r.items()}
 
 
-def test_cycle_is_uniform(spark):
+def test_cycle_is_uniform(spark, use_path):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1)], "src long, dst long")
-    got = {r.id: r.rank for r in pagerank(edges).collect()}
-    assert got == {1: round(1 / 3, 6), 2: round(1 / 3, 6), 3: round(1 / 3, 6)}
+    for path in PATHS:
+        use_path(path)
+        stats: dict = {}
+        got = {r.id: r.rank for r in pagerank(edges, stats=stats).collect()}
+        assert stats["path"] == path
+        assert got == {
+            1: round(1 / 3, 6), 2: round(1 / 3, 6), 3: round(1 / 3, 6)}
 
 
-def test_matches_python_reference_with_dangling(spark):
+def test_matches_python_reference_with_dangling(spark, use_path):
     # node 4 is dangling; duplicate edge (1,2) must count once
     raw = [(1, 2), (1, 2), (1, 3), (2, 4), (3, 4), (2, 3)]
     edges = spark.createDataFrame(raw, "src long, dst long")
-    got = {r.id: r.rank for r in pagerank(edges).collect()}
     want = _py_pagerank(raw)
-    assert set(got) == set(want)
-    for v in want:
-        assert abs(got[v] - want[v]) < 2e-6, (v, got[v], want[v])
+    for path in PATHS:
+        use_path(path)
+        got = {r.id: r.rank for r in pagerank(edges).collect()}
+        assert set(got) == set(want)
+        for v in want:
+            assert abs(got[v] - want[v]) < 2e-6, (path, v, got[v], want[v])
 
 
-def test_total_mass_conserved(spark):
+def test_total_mass_conserved(spark, use_path):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 1), (1, 5)], "src long, dst long")
-    total = sum(r.rank for r in pagerank(edges, iterations=5).collect())
-    assert abs(total - 1.0) < 1e-4
+    for path in PATHS:
+        use_path(path)
+        total = sum(r.rank for r in pagerank(edges, iterations=5).collect())
+        assert abs(total - 1.0) < 1e-4, path
 
 
-def test_convergence_stop_is_early_and_value_preserving(spark):
+def test_convergence_stop_is_early_and_value_preserving(spark, use_path):
+    for path in PATHS:
+        use_path(path)
+        _check_convergence_stop(spark)
+
+
+def _check_convergence_stop(spark):
     # a 3-cycle's uniform start IS the fixed point: delta hits 0 after
     # the first round, so the tol path must exit long before the ceiling
     edges = spark.createDataFrame(
@@ -77,12 +112,20 @@ def test_convergence_stop_is_early_and_value_preserving(spark):
     assert early2 == fixed2
 
 
-def test_warm_start_same_fixed_point_fewer_iterations(spark):
+def test_warm_start_same_fixed_point_fewer_iterations(spark, use_path):
     """Incremental-recrawl path: warm-starting from the previous
     converged ranks after a small edge delta must (a) reach the SAME
     rounded ranks as a cold run on the new graph, and (b) take fewer
     power iterations to converge. A new node absent from the seed gets
-    uniform mass and the seed renormalizes, so mass stays 1."""
+    uniform mass and the seed renormalizes, so mass stays 1. Warm
+    starts always take the distributed loop; the cold runs they are
+    compared with run on both paths."""
+    for path in PATHS:
+        use_path(path)
+        _check_warm_start(spark)
+
+
+def _check_warm_start(spark):
     base_raw = [(1, 2), (1, 3), (2, 4), (3, 4), (2, 3), (4, 1)]
     base = spark.createDataFrame(base_raw, "src long, dst long")
     s0: dict = {}
@@ -120,14 +163,16 @@ def test_warm_start_same_fixed_point_fewer_iterations(spark):
     assert abs(sum(warm.values()) - 1.0) < 1e-4
 
 
-def test_hub_outranks_leaves(spark):
+def test_hub_outranks_leaves(spark, use_path):
     # star: everyone links to 0
     edges = spark.createDataFrame(
         [(i, 0) for i in range(1, 6)], "src long, dst long")
-    rows = {r.id: r.rank for r in pagerank(edges).collect()}
-    assert rows[0] == max(rows.values())
-    leaf_ranks = {v for k, v in rows.items() if k != 0}
-    assert len(leaf_ranks) == 1  # symmetric leaves tie exactly
+    for path in PATHS:
+        use_path(path)
+        rows = {r.id: r.rank for r in pagerank(edges).collect()}
+        assert rows[0] == max(rows.values())
+        leaf_ranks = {v for k, v in rows.items() if k != 0}
+        assert len(leaf_ranks) == 1  # symmetric leaves tie exactly
 
 
 # --- HITS -----------------------------------------------------------------
@@ -315,45 +360,71 @@ def _py_ppr(edges, seeds, d=0.85, iters=10):
     return {v: round(x, 6) for v, x in r.items()}
 
 
-def test_personalized_pagerank_matches_python_reference(spark):
+def test_personalized_pagerank_matches_python_reference(spark, use_path):
     raw = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)]
     edges = spark.createDataFrame(raw, "src long, dst long")
     seeds = spark.createDataFrame([(1,)], "id long")
-    got = {
-        r.id: r.rank
-        for r in personalized_pagerank(
-            edges, seeds, iterations=10, tol=0
-        ).collect()
-    }
     want = _py_ppr(raw, {1})
-    assert set(got) == set(want)
-    for v in want:
-        assert abs(got[v] - want[v]) < 2e-6, (v, got[v], want[v])
+    for path in PATHS:
+        use_path(path)
+        stats: dict = {}
+        got = {
+            r.id: r.rank
+            for r in personalized_pagerank(
+                edges, seeds, iterations=10, tol=0, stats=stats
+            ).collect()
+        }
+        assert stats == {"iterations_run": 10, "path": path}
+        assert set(got) == set(want)
+        for v in want:
+            assert abs(got[v] - want[v]) < 2e-6, (path, v, got[v], want[v])
 
 
-def test_personalized_pagerank_unreachable_nodes_get_zero(spark):
+def test_personalized_pagerank_unreachable_nodes_get_zero(spark, use_path):
     # two components; seed in the first — the second must converge to 0
     raw = [(1, 2), (2, 1), (8, 9), (9, 8)]
     edges = spark.createDataFrame(raw, "src long, dst long")
     seeds = spark.createDataFrame([(1,)], "id long")
-    got = {
-        r.id: r.rank
-        for r in personalized_pagerank(edges, seeds).collect()
-    }
-    assert got[8] == 0.0 and got[9] == 0.0
-    assert got[1] > got[2] > 0  # seed holds the teleport mass
+    for path in PATHS:
+        use_path(path)
+        got = {
+            r.id: r.rank
+            for r in personalized_pagerank(edges, seeds).collect()
+        }
+        assert got[8] == 0.0 and got[9] == 0.0
+        assert got[1] > got[2] > 0  # seed holds the teleport mass
 
 
-def test_personalized_pagerank_ignores_unknown_seeds(spark):
+def test_personalized_pagerank_ignores_unknown_seeds(spark, use_path):
     raw = [(1, 2), (2, 1)]
     edges = spark.createDataFrame(raw, "src long, dst long")
     seeds = spark.createDataFrame([(1,), (99,)], "id long")  # 99 not in graph
-    got = {
-        r.id: r.rank
-        for r in personalized_pagerank(edges, seeds).collect()
-    }
-    # teleport weight renormalized over surviving seeds: mass sums to 1
-    assert abs(sum(got.values()) - 1.0) < 1e-5
+    for path in PATHS:
+        use_path(path)
+        got = {
+            r.id: r.rank
+            for r in personalized_pagerank(edges, seeds).collect()
+        }
+        # teleport weight renormalized over surviving seeds: mass sums to 1
+        assert abs(sum(got.values()) - 1.0) < 1e-5, path
+
+
+def test_personalized_pagerank_only_unknown_seeds_gives_zero(spark, use_path):
+    """No seed is a node of the graph: nothing to teleport to, so every
+    node gets rank 0.0 — on both paths (the distributed loop used to
+    raise ANSI DIVIDE_BY_ZERO on the empty seed count)."""
+    raw = [(1, 2), (2, 1), (2, 3)]
+    edges = spark.createDataFrame(raw, "src long, dst long")
+    seeds = spark.createDataFrame([(98,), (99,)], "id long")
+    for path in PATHS:
+        use_path(path)
+        stats: dict = {}
+        got = {
+            r.id: r.rank
+            for r in personalized_pagerank(edges, seeds, stats=stats).collect()
+        }
+        assert stats["path"] == path
+        assert got == {1: 0.0, 2: 0.0, 3: 0.0}, path
 
 
 def test_pagerank_warm_start_duplicate_seed_ids(spark):
@@ -381,15 +452,19 @@ def test_pagerank_warm_start_duplicate_seed_ids(spark):
     assert abs(sum(dup.values()) - 1.0) < 1e-9
 
 
-def test_pagerank_degenerate_seeds_fall_back_to_uniform(spark):
+def test_pagerank_degenerate_seeds_fall_back_to_uniform(spark, use_path):
     """Seeds whose IN-GRAPH mass is zero must fall back to the uniform
     start (review-found): all weight on ids absent from the graph
     passes the pre-total guard (pt > 0) but scales every surviving
     node's share to 0 — without the t > 0 guard that is DIVIDE_BY_ZERO
     under ANSI and all-NULL ranks without it. Arbitrary weight scales
     (the docstring's contract) must also survive the double pre-scale."""
-    from crawler_spark.operators.graph import pagerank
+    for path in PATHS:
+        use_path(path)
+        _check_degenerate_seeds(spark)
 
+
+def _check_degenerate_seeds(spark):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c")],
         "src string, dst string")
@@ -412,3 +487,133 @@ def test_pagerank_degenerate_seeds_fall_back_to_uniform(spark):
     got_huge = {r.id: r.rank for r in
                 pagerank(edges, iterations=60, init_ranks=huge).collect()}
     assert got_huge == cold, "seed scale must never move the fixed point"
+
+
+# --- driver-side solve vs the distributed loop ----------------------------
+def _unrounded(edges, seeds, **kw):
+    """(ranks before the 6-decimal output rounding, stats)."""
+    stats: dict = {}
+    kw = {"damping": 0.85, "iterations": 10, "src_col": "src",
+          "dst_col": "dst", "tol": 1e-7, "check_every": 2, **kw}
+    ranks = graph_ops._link_ranks(edges, seeds, stats=stats, **kw)
+    return {r.id: r.rank for r in ranks.collect()}, stats
+
+
+def _assert_paths_bit_identical(use_path, edges, seeds, **kw):
+    use_path("driver")
+    drv, s_drv = _unrounded(edges, seeds, **kw)
+    use_path("distributed")
+    dist, s_dist = _unrounded(edges, seeds, **kw)
+    assert (s_drv["path"], s_dist["path"]) == PATHS
+    assert drv == dist  # exact float equality, no tolerance
+    assert s_drv["iterations_run"] == s_dist["iterations_run"]
+    return s_drv["iterations_run"]
+
+
+@pytest.mark.parametrize("raw", [
+    # node 4 dangling (per-round dangling-mass term)
+    [(1, 2), (1, 3), (2, 4), (3, 4), (2, 3)],
+    # two components, one with a dangling sink
+    [(1, 2), (2, 1), (8, 9), (9, 8), (9, 10)],
+    # duplicate edges collapse before the degree count
+    [(1, 2), (1, 2), (2, 3), (3, 1), (3, 1), (3, 2)],
+], ids=["dangling", "disconnected", "duplicate_edges"])
+def test_driver_solve_bit_identical_to_distributed(spark, use_path, raw):
+    """The driver-side solve replays the distributed loop's arithmetic
+    exactly: same unrounded ranks, same iterations_run, for PageRank
+    and PPR (the tol-driven exit is locked by the next test)."""
+    edges = spark.createDataFrame(raw, "src long, dst long")
+    seeds = spark.createDataFrame([(raw[0][0],)], "id long")
+    for s in (None, seeds):
+        _assert_paths_bit_identical(use_path, edges, s, tol=0.0)
+
+
+def test_driver_solve_bit_identical_on_early_exit(spark, use_path):
+    # check_every=2 cadence: the exit round must match, not just values
+    raw = [(1, 2), (1, 3), (2, 4), (3, 4), (2, 3), (4, 1)]
+    edges = spark.createDataFrame(raw, "src long, dst long")
+    rounds = _assert_paths_bit_identical(
+        use_path, edges, None, iterations=60, check_every=2)
+    assert rounds < 60 and rounds % 2 == 0
+
+
+def test_driver_solve_bit_identical_on_cooccurrence_graph(spark, use_path):
+    """The data-scale graph behind graph_influence_ppr (sf0.01 events
+    co-occurrence, symmetrized) with its seed cohort and schedule."""
+    from conftest import SF_ORACLE as sf
+    from pyspark.sql import functions as F
+
+    from crawler_spark.plans.queries_graph import _event_cooccurrence_edges
+    from crawler_spark.sources import load_table
+
+    und = _event_cooccurrence_edges(spark, sf)
+    edges = und.unionByName(
+        und.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    ).localCheckpoint()
+    seeds = (
+        load_table(spark, sf, "events")
+        .select(F.col("user_id").alias("id"))
+        .where(F.col("user_id") % 50 == 0)
+        .distinct()
+    )
+    rounds = _assert_paths_bit_identical(
+        use_path, edges, seeds, src_col="u", dst_col="v", iterations=8,
+        check_every=8)
+    assert rounds == 8
+
+
+def test_decimal_units_match_spark_cast(spark):
+    """Lock of the driver-side replica of ``_exact_sum``: each double's
+    ``CAST(x AS DECIMAL(38,18))`` and each group's decimal sum cast
+    back to double, against Spark on a seeded sample. Includes
+    2.82879384806159e17, which JDK 17's Double.toString prints with
+    18 digits — a repr-based replica would get it wrong."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    rng = random.Random(20)
+    xs = [2.82879384806159e17, 0.0, 1e-18, 5e-19, 1.5e-18, 0.1, 1.0]
+    for _ in range(20_000):
+        k = rng.random()
+        if k < 0.4:  # rank / out-degree shaped
+            xs.append(rng.random() / rng.randint(1, 5000))
+        elif k < 0.8:  # across the decimal's 18 fractional digits
+            xs.append(rng.random() * 10 ** rng.uniform(-20, 0))
+        else:
+            xs.append(rng.uniform(-1e6, 1e6) * 10 ** rng.uniform(-20, 0))
+    df = spark.createDataFrame(
+        [(i, i % 97, x) for i, x in enumerate(xs)], "i long, g long, x double")
+    dec = {
+        r.i: r.d for r in df.select(
+            "i", F.col("x").cast("decimal(38,18)").alias("d")).collect()
+    }
+    units = graph_ops._decimal_units(spark, xs)
+    assert [
+        int(graph_ops._DEC38.scaleb(dec[i], 18)) for i in range(len(xs))
+    ] == units
+
+    sums = {
+        r.g: r.s for r in df.groupBy("g").agg(
+            graph_ops._exact_sum("x").alias("s")).collect()
+    }
+    by_group: dict = {}
+    for i, u in enumerate(units):
+        by_group[i % 97] = by_group.get(i % 97, 0) + u
+    assert sums == {g: t / graph_ops._UNITS for g, t in by_group.items()}
+
+
+def test_solver_path_is_recorded(spark, use_path):
+    """``stats["path"]``: the crawl fixture graph takes the driver
+    path, a gate of 0 edges forces the distributed loop — same ranks."""
+    from crawler_spark.plans.queries_pipeline import _fixture_edges
+
+    edges = _fixture_edges(spark)
+    got = {}
+    for path in PATHS:
+        use_path(path)
+        stats: dict = {}
+        got[path] = {r.id: r.rank for r in
+                     pagerank(edges, check_every=10, stats=stats).collect()}
+        assert stats == {"iterations_run": 10, "path": path}
+    assert got["driver"] == got["distributed"]

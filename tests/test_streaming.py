@@ -313,6 +313,33 @@ class TestIngestStream:
         finally:
             q.stop()
 
+    def test_first_batch_duplicate_url_stored_once(self, spark, tmp_path):
+        """A micro-batch that holds a url twice, into buckets with no
+        live rows yet, stores it once: merge_by_key's rule runs against
+        an empty table instead of being skipped. Both copies carry the
+        batch's one last_crawled stamp, so either may win the tie."""
+        from crawler_spark.streaming.ingest_stream import (
+            make_batch_processor,
+            read_pages_table,
+        )
+
+        pages_dir = str(tmp_path / "pages")
+        process = make_batch_processor(pages_dir, str(tmp_path / "dead"))
+        url = "https://dup.test/p"
+        process(
+            spark.createDataFrame(
+                [
+                    (url, "text/html", b"<title>one</title><body>x</body>", None),
+                    (url, "text/html", b"<title>two</title><body>y</body>", None),
+                ],
+                schemas.FETCHED,
+            ),
+            0,
+        )
+        rows = read_pages_table(spark, pages_dir).collect()
+        assert [r.url for r in rows] == [url]
+        assert rows[0].title in {"one", "two"}
+
     def test_dead_letter_replay_idempotent(self, spark, tmp_path):
         """Re-running a micro-batch with the SAME epoch_id (at-least-once
         replay) must not duplicate dead-letter rows."""
