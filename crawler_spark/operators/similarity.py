@@ -930,6 +930,35 @@ def pq_encode_udf(codebooks: Sequence[Sequence[Sequence[float]]]):
     return _encode
 
 
+def _adc_table(
+    codebooks: Sequence[Sequence[Sequence[float]]],
+    query_vec: Sequence[float],
+) -> list[float]:
+    """Flattened ADC lookup table, subspace-major (flat[j*n_codes + c],
+    zero-padded to the largest codebook) with
+    t[j][c] = Σ_{i even} cm[c,i]·q_j[i] + Σ_{i odd} cm[c,i]·q_j[i]:
+    every product rounded on its own (no FMA), each lane summed left to
+    right from 0.0. The order is fixed here rather than left to a BLAS
+    product because these doubles become plan literals: a kernel picked
+    from the CPU (FMA or not, lane width, threads) would move the plan
+    hash from machine to machine."""
+    import numpy as np
+
+    q = np.asarray(list(map(float, query_vec)), dtype=np.float64)
+    mats = [np.asarray(b, dtype=np.float64) for b in codebooks]
+    sub = mats[0].shape[1]
+    n_codes = max(m.shape[0] for m in mats)
+    flat: list[float] = []
+    for j, cm in enumerate(mats):
+        prod = cm * q[j * sub : (j + 1) * sub]
+        lanes = [np.zeros(len(cm)), np.zeros(len(cm))]
+        for i in range(sub):
+            lanes[i % 2] = lanes[i % 2] + prod[:, i]
+        flat.extend(float(v) for v in lanes[0] + lanes[1])
+        flat.extend(0.0 for _ in range(n_codes - cm.shape[0]))
+    return flat
+
+
 def pq_adc_distance(
     codes_col: str,
     codebooks: Sequence[Sequence[Sequence[float]]],
@@ -939,21 +968,16 @@ def pq_adc_distance(
     lookup table t[j][c] = q_j · codebook[j][c] (n_subspaces × n_codes
     floats — bytes, constant-folded into the plan), and scoring a
     stored vector is n_subspaces array lookups over its code ids:
-    distance ≈ -Σ_j t[j][code_j]. Pure expression, codegen."""
-    import numpy as np
+    distance ≈ -Σ_j t[j][code_j]. Pure expression, codegen.
 
-    q = np.asarray(list(map(float, query_vec)), dtype=np.float64)
-    mats = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    sub = mats[0].shape[1]
-    n_codes = max(m.shape[0] for m in mats)
-    # flattened ADC table, subspace-major: flat[j*n_codes + c]
-    flat: list[float] = []
-    for j, cm in enumerate(mats):
-        tj = cm @ q[j * sub : (j + 1) * sub]
-        flat.extend(float(v) for v in tj)
-        flat.extend(0.0 for _ in range(n_codes - cm.shape[0]))
-    table = F.array(*[F.lit(v).cast("double") for v in flat])
-    j_idx = F.sequence(F.lit(0), F.lit(len(mats) - 1))
+    The table's doubles are plan literals, so ``_adc_table`` sums each
+    dot product in one fixed order (even-index and odd-index lanes,
+    each left to right, no FMA) instead of a BLAS product, whose
+    CPU-picked kernel would make the plan hash depend on the CPU."""
+    n_codes = max(len(b) for b in codebooks)
+    table = F.array(
+        *[F.lit(v).cast("double") for v in _adc_table(codebooks, query_vec)])
+    j_idx = F.sequence(F.lit(0), F.lit(len(codebooks) - 1))
     return -F.aggregate(
         j_idx,
         F.lit(0.0).cast("double"),
@@ -988,6 +1012,11 @@ def knn_topk_pq(
     re-rank by id against the raw table). FAISS's IndexPQ + refine is
     this exact recipe; compose with the IVF coarse quantizer for
     IVFPQ at the full 100 TB scale.
+
+    The lookup table comes from ``pq_adc_distance``: each entry sums
+    its even-index and odd-index products in two left-to-right lanes,
+    no BLAS, because the table's doubles go into the plan and a BLAS
+    kernel picked from the CPU would make the plan hash CPU-dependent.
     """
     norm = df.select(
         id_col, V.l2_normalize(vec_col).alias("v")

@@ -394,6 +394,83 @@ def test_pq_adc_recall_and_exact_rerank(spark):
     assert [r.vec_id for r in full] == list(exact_all)[:5]
 
 
+_PQ_CHILD = """
+import json, sys
+from crawler_spark.operators.similarity import _adc_table, train_pq_codebooks
+from crawler_spark.plans.queries_vector import QUERY_VEC
+from crawler_spark.session import get_spark
+from crawler_spark.sources import load_table
+
+spark = get_spark("pq-blas-child", cpus=1)
+books = train_pq_codebooks(load_table(spark, sys.argv[1], "embeddings"),
+                           n_subspaces=8, n_codes=32)
+with open(sys.argv[2], "w") as fh:
+    json.dump({"books": books, "table": _adc_table(books, QUERY_VEC)}, fh)
+spark.stop()
+"""
+
+
+def test_pq_codebooks_and_adc_table_independent_of_blas_kernel(tmp_path):
+    """The ADC table's doubles are plan literals (the PQ plan hashes in
+    PLAN_HASHES.json cover them), so they must not depend on the BLAS
+    kernel OpenBLAS picks from the CPU or on its thread count. Two
+    processes train the codebooks and build the table under different
+    kernels and thread settings; both must agree bit for bit, and the
+    table must equal a plain-float evaluation of its documented order:
+    even-index lane + odd-index lane, each summed left to right, every
+    product rounded on its own. A build without DYNAMIC_ARCH ignores
+    OPENBLAS_CORETYPE; the test still compares the two processes."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from crawler_spark.plans.queries_vector import QUERY_VEC
+
+    try:
+        with open("/proc/cpuinfo") as fh:
+            flags = fh.read()
+    except OSError:
+        flags = ""
+    # a forced kernel the CPU lacks would die on an illegal instruction
+    wide = "SkylakeX" if "avx512f" in flags else "Haswell"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    runs = []
+    for core, threads in (("Sandybridge", "1"), (wide, "4")):
+        out = tmp_path / f"{core}.json"
+        env = dict(os.environ, OPENBLAS_CORETYPE=core,
+                   OPENBLAS_NUM_THREADS=threads, SPARK_GRAFT_DRIVER_MEM="1g")
+        subprocess.run(
+            [sys.executable, "-c", _PQ_CHILD, "/root/testdata/sf0.001",
+             str(out)],
+            cwd=root, env=env, check=True, timeout=300,
+            stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+        )
+        runs.append(json.loads(out.read_text()))
+
+    def hexed(xs):
+        return [float(x).hex() for x in xs]
+
+    a, b = runs
+    assert hexed(x for bk in a["books"] for row in bk for x in row) == \
+        hexed(x for bk in b["books"] for row in bk for x in row)
+    assert hexed(a["table"]) == hexed(b["table"])
+
+    q = [float(x) for x in QUERY_VEC]
+    books = a["books"]
+    sub = len(books[0][0])
+    n_codes = max(len(bk) for bk in books)
+    want = []
+    for j, bk in enumerate(books):
+        for row in bk:
+            lanes = [0.0, 0.0]
+            for i, c in enumerate(row):
+                lanes[i % 2] += c * q[j * sub + i]
+            want.append(lanes[0] + lanes[1])
+        want.extend([0.0] * (n_codes - len(bk)))
+    assert hexed(a["table"]) == hexed(want)
+
+
 def test_random_projection_preserves_distances_and_is_deterministic(spark):
     """JL property: relative pairwise-distance distortion at 64→32
     dims stays small on average; same seed → identical projection;
