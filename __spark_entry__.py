@@ -129,6 +129,18 @@ _NEVER_DRIVER_VERIFIED = [
     "knn_index_append",
     "knn_probe_precomputed",
     "diag_ann_recall",
+    # --- (c) session confs change only through session.scoped_conf:
+    # each streaming replay's shuffle cap (session.stream_conf, same
+    # value) now also covers stream construction and start, so a
+    # construction error cannot leak it. Same plans; the sink-source
+    # fingerprint covers the edited callables. Also moved and already
+    # queued above: dedup_semantic_incremental (wave-loop scope),
+    # streaming_warc_ingest_e2e, streaming_semantic_dedup_e2e and
+    # streaming_index_append_e2e.
+    "streaming_neardup_e2e",
+    "streaming_dedup_horizon_e2e",
+    "streaming_sessionize_e2e",
+    "streaming_distilled_filter_e2e",
 ]
 
 

@@ -376,23 +376,6 @@ def word_shingles(col: ColumnOrName, k: int) -> Column:
     return F.when(n >= k, shingles).otherwise(F.array().cast("array<string>"))
 
 
-def quality_stats(col: ColumnOrName) -> dict[str, Column]:
-    """Simple quality-scoring signals over a text column (length, token
-    count, mean token length, punctuation and whitespace ratios)."""
-    c = _c(col)
-    n_chars = F.length(c)
-    n_ws = n_chars - F.length(F.regexp_replace(c, r"\s", ""))
-    n_punct = F.length(F.regexp_replace(c, r"[^!-/:-@\[-`{-~]", ""))
-    toks = token_count(col)
-    return {
-        "n_chars": n_chars,
-        "n_tokens": toks,
-        "mean_token_len": (n_chars - n_ws).cast("double") / F.greatest(toks, F.lit(1)),
-        "punct_ratio": n_punct.cast("double") / F.greatest(n_chars, F.lit(1)),
-        "ws_ratio": n_ws.cast("double") / F.greatest(n_chars, F.lit(1)),
-    }
-
-
 def strip_boilerplate(
     col: ColumnOrName,
     min_len: int = 35,

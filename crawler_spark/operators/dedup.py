@@ -736,15 +736,14 @@ def _closure_distributed(edges: DataFrame, max_iterations: int) -> DataFrame:
     # the ROUND loop below shuffles only the two-long-column
     # label/edge frames, so size its partitions to the measured edge
     # count (guide §2 scale-adaptive); min aggregations keep labels
-    # identical at any partition count. Restore in finally so an error
-    # can't leak it.
+    # identical at any partition count.
     from crawler_spark.session import loop_conf
 
     spark = edges.sparkSession
     converged = False
-    # shrunk-regime decision + conf save/restore centralized in
-    # session.loop_conf (round 13 — see its docstring for the regime
-    # rationale and the single-threaded-session assumption)
+    # shrunk-regime decision + conf scope centralized in
+    # session.loop_conf (see its docstring for the regime rationale;
+    # a concurrent scope on the same session raises)
     with loop_conf(spark, edges.count()) as (_loop_parts, shrunk):
 
         def one_round(lbls: DataFrame) -> DataFrame:

@@ -244,9 +244,9 @@ def _distributed_loop(
     from crawler_spark.session import loop_conf
 
     spark = e.sparkSession
-    # shrunk-regime decision + conf save/restore centralized in
-    # session.loop_conf (round 13 — see its docstring for the regime
-    # rationale and the single-threaded-session assumption)
+    # shrunk-regime decision + conf scope centralized in
+    # session.loop_conf (see its docstring for the regime rationale;
+    # a concurrent scope on the same session raises)
     with loop_conf(spark, n_edges) as (_loop_parts, shrunk):
 
         def one_round(r: DataFrame) -> DataFrame:
@@ -799,8 +799,8 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     # AQE must be OFF while the checkpoint materializes: under an
     # AdaptiveSparkPlan the captured partitioning is
     # UnknownPartitioning and the join re-shuffles both sides
-    # (measured round 13) — same single-threaded-session caveat as
-    # session.loop_conf. Partition count sized to the measured edge
+    # (measured round 13) — session.scoped_conf turns it off for the
+    # checkpoint only. Partition count sized to the measured edge
     # count (scale-adaptive, guide §2): the count scans the
     # just-materialized deg/edges checkpoints, not the raw projection.
     # FLOOR OF 2: repartition(1, src) plans as SinglePartition, not
@@ -811,25 +811,21 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     # sub-50k-row frame cost nothing; real-scale counts clear the
     # floor anyway. Partition count never changes values here — every
     # downstream op is an aggregate/join on content, not position.
-    from crawler_spark.session import loop_shuffle_partitions
+    from crawler_spark.session import loop_shuffle_partitions, scoped_conf
 
     spark = edges.sparkSession
     wedge_parts = max(2, loop_shuffle_partitions(spark, edges.count()))
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     oriented_lazy = e.select(
         F.when(F.col("ku") < F.col("kv"), F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(F.col("ku") < F.col("kv"), F.col("kv")).otherwise(F.col("ku")).alias("dk"),
         F.when(F.col("ku") < F.col("kv"), F.col("v")).otherwise(F.col("u")).alias("dst"),
     )
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         oriented = (
             oriented_lazy.repartition(wedge_parts, "src")
             .sortWithinPartitions("src")
             .localCheckpoint()
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     a, c = oriented.alias("a"), oriented.alias("c")
     wedges = a.join(c, "src").filter(F.col("a.dk") < F.col("c.dk")).select(
         F.col("a.dst").alias("wu"), F.col("c.dst").alias("wv")

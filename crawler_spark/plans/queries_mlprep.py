@@ -1373,6 +1373,7 @@ def streaming_distilled_filter_e2e(spark: SparkSession, sf_dir: str) -> DataFram
     scoring is stateless per document."""
     from crawler_spark.operators.upsert import key_bucket, merge_into_bucketed
     from crawler_spark.plans.queries_sources import _memo_tmpdir
+    from crawler_spark.session import stream_conf
     from crawler_spark.streaming.ingest_stream import read_pages_table
 
     def build_src(path: str) -> None:
@@ -1395,13 +1396,8 @@ def streaming_distilled_filter_e2e(spark: SparkSession, sf_dir: str) -> DataFram
         )
         merge_into_bucketed(spark, tbl, kept, key="doc_id")
 
-    # per-batch jobs are tiny — size the shuffle to the stream (the
-    # documented trade every streaming e2e query here makes), restore
-    # inside finally so a construction error can't leak the clamp
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(min(int(prev_parts), 8)))
+    # per-batch jobs are tiny — size the shuffle to the stream
+    with stream_conf(spark):
         stream = (
             spark.readStream.schema("doc_id bigint, text string")
             .option("maxFilesPerTrigger", 2)
@@ -1416,8 +1412,6 @@ def streaming_distilled_filter_e2e(spark: SparkSession, sf_dir: str) -> DataFram
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     landed = read_pages_table(spark, tbl)
     if landed is None:

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from crawler_spark.plans.oracle_pins import pin_kwargs as _PINS_KW
 from crawler_spark.plans.registry import register
+from crawler_spark.session import scoped_conf, stream_conf
 from crawler_spark.sources.fetch import StubFetcher
 from crawler_spark.sources.file_handlers import STUB_PDF_MAGIC
 
@@ -124,35 +125,28 @@ def streaming_neardup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"neardup_e2e_{uuid.uuid4().hex[:8]}"
     schema = load_table(spark, sf_dir, "documents").select("doc_id", "text").schema
-    # state shards = shuffle partitions AT QUERY START and each shard
-    # carries a state-store instance; size them to the stream, not the
-    # batch default (32 local shards cost ~6s of pure store setup for a
-    # one-file replay — a real deployment sizes this UP with the rate)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(int(prev_parts), 8))
-    )
-    # the file-stream source wants a DIRECTORY; sf_dir holds one file
-    # per table, so glob-filter the stream down to documents.parquet
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        .select("doc_id", "text")
-    )
-    q = (
-        streaming_neardup_verdicts(stream)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation",
-                tempfile.mkdtemp(prefix="neardup_ckpt_"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    # state shards sized to the stream, not the batch default
+    with stream_conf(spark):
+        # the file-stream source wants a DIRECTORY; sf_dir holds one
+        # file per table, so glob-filter the stream to documents.parquet
+        stream = (
+            spark.readStream.schema(schema)
+            .option("pathGlobFilter", "documents.parquet")
+            .parquet(sf_dir)
+            .select("doc_id", "text")
+        )
+        q = (
+            streaming_neardup_verdicts(stream)
+            .writeStream.format("memory").queryName(name)
+            .outputMode("append")
+            .option("checkpointLocation",
+                    tempfile.mkdtemp(prefix="neardup_ckpt_"))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     return (
         reduce_verdicts(spark.table(name))
         # dup_of = -1 for uniques instead of NULL: a nullable BIGINT
@@ -202,34 +196,30 @@ def streaming_dedup_horizon_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"dedup_horizon_e2e_{uuid.uuid4().hex[:8]}"
     schema = load_table(spark, sf_dir, "documents").select("doc_id", "text").schema
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(int(prev_parts), 8))
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        .select(
-            F.col("doc_id").cast("string").alias("url"),
-            F.col("text").alias("content"),
-            (F.to_timestamp(F.lit("2026-01-01 00:00:00"))
-             + F.make_interval(mins=F.col("doc_id"))).alias("fetched_at"),
+    with stream_conf(spark):
+        stream = (
+            spark.readStream.schema(schema)
+            .option("pathGlobFilter", "documents.parquet")
+            .parquet(sf_dir)
+            .select(
+                F.col("doc_id").cast("string").alias("url"),
+                F.col("text").alias("content"),
+                (F.to_timestamp(F.lit("2026-01-01 00:00:00"))
+                 + F.make_interval(mins=F.col("doc_id"))).alias("fetched_at"),
+            )
         )
-    )
-    q = (
-        streaming_dedup_within_horizon(stream, horizon_sec=365 * 86400)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation",
-                tempfile.mkdtemp(prefix="dedup_horizon_ckpt_"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        q = (
+            streaming_dedup_within_horizon(stream, horizon_sec=365 * 86400)
+            .writeStream.format("memory").queryName(name)
+            .outputMode("append")
+            .option("checkpointLocation",
+                    tempfile.mkdtemp(prefix="dedup_horizon_ckpt_"))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     return spark.table(name).select("fp").orderBy("fp")
 
 
@@ -367,17 +357,13 @@ def _fixture_crawl_items(spark: SparkSession) -> DataFrame:
         # measured 4→1 partitions cuts the one-off fixture crawl by
         # several seconds); the collect below materializes every wave
         # while the setting is in force
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "1")
-        try:
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "1"}):
             items, _dead = crawl(
                 spark, StubFetcher(FIXTURE_SITE), ["https://fixture.test/"],
                 allowed_domains=["fixture.test"], depth_limit=2,
                 obey_robots=True,
             )
             _FIXTURE_CRAWL_CACHE = (items.collect(), items.schema)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.createDataFrame(*_FIXTURE_CRAWL_CACHE)
 
 
@@ -420,30 +406,16 @@ def crawl_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawler_spark.operators.graph import pagerank
 
     edges = _fixture_edges(spark)
-    # ONE shuffle partition: the fixture site is a handful of nodes,
-    # so every power-iteration stage at the batch default (32
-    # partitions) is pure task-scheduling overhead — and a single
-    # partition makes each per-round sum a SEQUENTIAL fold, removing
-    # the partial-aggregation combine-order sensitivity that made the
-    # 6dp VALUES pin a potential flake (review-found): the pinned
-    # vector no longer depends on task combine order at all. AQE off
-    # for the same reason; corpus-scale graph runs keep both defaults.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        # the iteration materializes INSIDE pagerank (localCheckpoint
-        # per round), so the sized-down confs cover the real work.
-        # check_every=10: the fixture walk runs all 10 rounds
-        # (measured, no early exit), so the cadenced delta checks were
-        # 4 wasted synchronizing jobs (round-12); identical ranks
-        # either way — tol sits an order below the 6dp rounding.
-        return pagerank(edges, check_every=10).orderBy(
-            F.col("rank").desc(), "id")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    # no conf regime here: the fixture graph is far below
+    # SMALL_GRAPH_EDGE_LIMIT, so pagerank solves it on the driver (one
+    # edge collect, sequential sums, a local-relation result), and a
+    # larger graph's loop runs under session.loop_conf (one partition
+    # and AQE off at fixture scale). check_every=10: the fixture walk
+    # runs all 10 rounds (measured, no early exit), so cadenced delta
+    # checks would be wasted synchronizing jobs; identical ranks
+    # either way — tol sits an order below the 6dp rounding.
+    return pagerank(edges, check_every=10).orderBy(
+        F.col("rank").desc(), "id")
 
 
 @register(
@@ -470,26 +442,24 @@ def crawl_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawler_spark.operators.graph import hits
 
     edges = _fixture_edges(spark)
-    # same single-partition deterministic-fold trade as crawl_pagerank,
-    # plus a FIXED single stretch: tol=0 with check_every=iterations
-    # composes all 16 rounds lazily and materializes them as ONE job —
-    # no per-stretch delta syncs, no intermediate checkpoints. 16 is
-    # enough margin past the fixed point at 6dp (the decaying hub
-    # component reaches ~5e-7 by round 14 on this graph; the default
-    # tol path needed all 20 rounds and 3 checkpoint jobs — measured
-    # 14.6 s → 7.3 s when the stretch landed; re-measured 7.6 s solo
-    # in round 11, figure current). The remaining bench-visible cost
+    # ONE shuffle partition and AQE off: every iteration stage at the
+    # batch default is pure task-scheduling overhead on a handful of
+    # nodes, and a single partition makes each per-round sum a
+    # SEQUENTIAL fold, so the 6dp VALUES pin does not depend on task
+    # combine order. Plus a FIXED single stretch: tol=0 with
+    # check_every=iterations composes all 16 rounds lazily and
+    # materializes them as ONE job — no per-stretch delta syncs, no
+    # intermediate checkpoints. 16 is enough margin past the fixed
+    # point at 6dp (the decaying hub component reaches ~5e-7 by round
+    # 14 on this graph; the default tol path needed all 20 rounds and 3
+    # checkpoint jobs — measured 14.6 s → 7.3 s when the stretch
+    # landed; re-measured 7.6 s solo in round 11, figure current). The remaining bench-visible cost
     # above the query itself was the SHARED fixture crawl, which as of
     # round 11 runs once per process for all consumers
     # (_fixture_crawl_items) instead of once for the e2e query plus
     # once for the graph fixture. Corpus-scale graphs keep the
     # defaults: there the per-round work amortizes the syncs and early
     # exit genuinely saves rounds.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_cg = spark.conf.get("spark.sql.codegen.wholeStage")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     # round-12 (guide §1.2 per-task work AFTER algorithm): profiling
     # showed ~90% of this query's wall was DRIVER-side planning+codegen
     # of the lazily-composed multi-round stretch, execution itself
@@ -501,15 +471,14 @@ def crawl_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-verified against the pinned VALUES oracle). Corpus-scale
     # graphs keep codegen on: there per-row compute dominates and the
     # fused stage pays for itself.
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try:
+    with scoped_conf(spark, {
+        "spark.sql.shuffle.partitions": "1",
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.codegen.wholeStage": "false",
+    }):
         return hits(edges, iterations=16, tol=0.0, check_every=8).orderBy(
             F.col("authority").desc(), F.col("hub").desc(), "id"
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.codegen.wholeStage", prev_cg)
 
 
 @register(
@@ -548,29 +517,24 @@ def streaming_index_append_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = tempfile.mkdtemp(prefix="idx_stream_out_") + "/banded"
 
     # two micro-batches exercise the incremental path; per-batch append
-    # jobs are tiny, so size the shuffle to the stream (same trade the
-    # other streaming e2e queries document)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(int(prev_parts), 8))
-    )
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda batch, _id: append_banded_index(batch, idx)
+    # jobs are tiny, so size the shuffle to the stream
+    with stream_conf(spark):
+        stream = (
+            spark.readStream.schema(emb.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
         )
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="idx_ckpt_"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        q = (
+            stream.writeStream.foreachBatch(
+                lambda batch, _id: append_banded_index(batch, idx)
+            )
+            .option("checkpointLocation", tempfile.mkdtemp(prefix="idx_ckpt_"))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     top = knn_topk_precomputed(spark, idx, QUERY_VEC, k=5)
     return top.select("vec_id", F.round("distance", 6).alias("distance"))
 
@@ -660,28 +624,24 @@ def streaming_sessionize_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = f"sessionize_e2e_{uuid.uuid4().hex[:8]}"
     stream = read_event_stream(spark, _event_replay_dir(spark, sf_dir))
-    # session-state shards = shuffle partitions at query start; size to
-    # the stream like the other streaming e2e queries
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(int(prev_parts), 8))
-    )
-    # the replay's 4 files are round-robin slices, not time slices, so
-    # a production-width watermark would drop the "late" half of every
-    # later batch — widen it past the dataset's span so the lockstep
-    # equality with the batch sessionizer holds exactly (watermark
-    # EVICTION semantics are pinned by streaming_dedup_horizon_e2e and
-    # the stateful.py tests; this query pins session-state MERGING)
-    q = (
-        session_windows(stream, watermark="3650 days")
-        .writeStream.format("memory")
-        .queryName(name).outputMode("complete").start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    # session-state shards sized to the stream
+    with stream_conf(spark):
+        # the replay's 4 files are round-robin slices, not time slices,
+        # so a production-width watermark would drop the "late" half of
+        # every later batch — widen it past the dataset's span so the
+        # lockstep equality with the batch sessionizer holds exactly
+        # (watermark EVICTION semantics are pinned by
+        # streaming_dedup_horizon_e2e and the stateful.py tests; this
+        # query pins session-state MERGING)
+        q = (
+            session_windows(stream, watermark="3650 days")
+            .writeStream.format("memory")
+            .queryName(name).outputMode("complete").start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     return spark.table(name).orderBy("user_id", "session_start")
 
 
@@ -796,13 +756,8 @@ def streaming_semantic_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         merge_into_bucketed(spark, tbl, verdicts, key="vec_id")
 
-    # per-batch jobs are tiny — size the shuffle to the stream (the
-    # documented trade every streaming e2e query here makes), restore
-    # inside finally so a construction error can't leak the clamp
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(min(int(prev_parts), 8)))
+    # per-batch jobs are tiny — size the shuffle to the stream
+    with stream_conf(spark):
         stream = (
             spark.readStream.schema(emb.schema)
             .option("maxFilesPerTrigger", 1)
@@ -817,8 +772,6 @@ def streaming_semantic_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     landed = read_pages_table(spark, tbl)
     if landed is None:  # an sf with no vec_id % 10 == 0 rows

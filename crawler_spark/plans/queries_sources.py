@@ -644,6 +644,7 @@ def streaming_warc_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact shape of tailing a Common Crawl drop as it publishes:
     O(batch) work per trigger, never a rebuild."""
     from crawler_spark.operators.upsert import key_bucket, merge_into_bucketed
+    from crawler_spark.session import stream_conf
     from crawler_spark.sources.warc import read_warc_blobs
     from crawler_spark.streaming.ingest_stream import read_pages_table
 
@@ -664,14 +665,7 @@ def streaming_warc_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_into_bucketed(spark, tbl, rows, key="url")
 
     # per-batch merge jobs are tiny — size the shuffle to the stream
-    # (the documented trade every streaming e2e query here makes);
-    # everything after the conf clamp sits inside the restore's try so
-    # a stream-construction error can't leak the clamped value
-    # session-wide (review-found)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(min(int(prev_parts), 8)))
+    with stream_conf(spark):
         stream = (
             spark.readStream.format("binaryFile")
             # binaryFile's schema is FIXED by the format, but the file
@@ -697,8 +691,6 @@ def streaming_warc_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     landed = read_pages_table(spark, tbl)
     return landed.select("url", "text", "n_bytes")

@@ -952,32 +952,26 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # derived from the row count per guide §2's scale-adaptive rule;
     # embedding rows are ~0.5 KB so ~100k rows ≈ a 50 MB partition).
     # Identical values at any partition count (max/min aggregations
-    # only — measured hash-identical at 1/2/8 partitions); restore
-    # inside finally so an error can't leak it
-    from crawler_spark.session import loop_shuffle_partitions
+    # only — measured hash-identical at 1/2/8 partitions)
+    from crawler_spark.session import loop_shuffle_partitions, scoped_conf
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_cg = spark.conf.get("spark.sql.codegen.wholeStage")
     wave_parts = loop_shuffle_partitions(
         spark, emb.count() // 4, rows_per_partition=100_000)
+    wave_conf = {"spark.sql.shuffle.partitions": str(wave_parts)}
+    if wave_parts == 1:
+        # sized-down waves: every per-wave job (normalize, probe,
+        # verdict, closure round, append) is a fresh small plan —
+        # whole-stage codegen compiles more than it executes
+        # (measured round 12: ~16 s → ~12.7 s for the 4-wave loop,
+        # hash-identical output). Production-sized waves keep it.
+        wave_conf["spark.sql.codegen.wholeStage"] = "false"
     waves = []
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(wave_parts))
-        if wave_parts == 1:
-            # sized-down waves: every per-wave job (normalize, probe,
-            # verdict, closure round, append) is a fresh small plan —
-            # whole-stage codegen compiles more than it executes
-            # (measured round 12: ~16 s → ~12.7 s for the 4-wave loop,
-            # hash-identical output). Production-sized waves keep it.
-            spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    with scoped_conf(spark, wave_conf):
         for k in range(4):
             batch = emb.filter(F.col("vec_id") % 4 == k)
             waves.append(
                 semantic_dedup_ingest_step(
                     spark, batch, idx, centroids, threshold=0.35, nprobe=2))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.codegen.wholeStage", prev_cg)
     out = waves[0]
     for w in waves[1:]:
         out = out.unionByName(w)

@@ -8,12 +8,18 @@ UTC-naive), and shuffle partitions sized to the machine rather than the
 Spark default of 200 (wrong in both directions: over-parallelized
 locally, under-parallelized on a 1000-executor cluster — production
 deployments should raise it alongside AQE's coalescing).
+
+Confs that change after the session is built change only through
+``scoped_conf`` (and its two policies, ``loop_conf`` and
+``stream_conf``): scoped, restored on every exit, and single-threaded
+per session by enforcement.
 """
 
 from __future__ import annotations
 
 import contextlib
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -47,6 +53,56 @@ def loop_shuffle_partitions(
     return max(1, min(default, math.ceil(max(n_rows, 1) / rows_per_partition)))
 
 
+# id(session) -> (owning thread id, nesting depth), while a scope is open
+_SCOPE_LOCK = threading.Lock()
+_SCOPE_OWNERS: dict[int, tuple[int, int]] = {}
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set ``conf`` on the session for the duration of the block — THE
+    one place a Spark conf changes after the session is built.
+
+    Each key's prior value is restored on every exit, error included;
+    a key unset before is unset again. Same-thread nesting is allowed:
+    an inner scope restores the outer scope's values on exit.
+
+    Session confs are session-global, so concurrent work on the same
+    session would run under the scope's values, and overlapping
+    restores could persist the wrong one. The single-threaded-session
+    assumption is therefore ENFORCED: a thread entering a scope on a
+    session another thread holds raises ``RuntimeError`` before
+    touching any conf."""
+    key, me = id(spark), threading.get_ident()
+    with _SCOPE_LOCK:
+        owner, depth = _SCOPE_OWNERS.get(key, (me, 0))
+        if owner != me:
+            raise RuntimeError(
+                "scoped_conf: another thread holds a conf scope on this "
+                "SparkSession; session confs are session-global, so "
+                "concurrent scopes would run under each other's values"
+            )
+        _SCOPE_OWNERS[key] = (me, depth + 1)
+    try:
+        prev = {k: spark.conf.get(k, None) for k in conf}
+        try:
+            for k, v in conf.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+    finally:
+        with _SCOPE_LOCK:
+            if depth:
+                _SCOPE_OWNERS[key] = (me, depth)
+            else:
+                del _SCOPE_OWNERS[key]
+
+
 @contextlib.contextmanager
 def loop_conf(
     spark: SparkSession,
@@ -54,9 +110,7 @@ def loop_conf(
     rows_per_partition: int = LOOP_ROWS_PER_PARTITION,
 ):
     """Session-conf regime for an iterative loop over a frame of
-    ``n_rows`` — THE one place the shrunk-loop trade lives (round 13,
-    centralizing five copy-pasted save/set/restore blocks per the
-    round-12 ADVICE):
+    ``n_rows`` — THE one place the shrunk-loop trade lives:
 
     * shuffle partitions sized by ``loop_shuffle_partitions`` (scale-
       adaptive — a fixture graph loops at 1 partition, a 10⁹-edge
@@ -69,33 +123,37 @@ def loop_conf(
       more code per throwaway round than the round executes. Full-
       scale loops keep both, including AQE's skew handling.
 
-    Yields ``(loop_parts, shrunk)``; restores all three confs on exit,
-    error included.
-
-    SINGLE-THREADED-SESSION ASSUMPTION (documented, not enforced):
-    ``spark.conf.set`` is session-global, so any CONCURRENT work on
-    the same SparkSession (a streaming micro-batch, a parallel query
-    thread) would execute under the loop's shrunk regime, and two
-    overlapping save/restore pairs could persist the wrong value.
-    Every caller in this repo runs its loop on a driver thread that
-    owns the session for the duration; a deployment that shares one
-    session across threads should clone the session (newSession()) or
-    scope these via SQLConf.withExistingConf instead."""
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_cg = spark.conf.get("spark.sql.codegen.wholeStage")
+    Yields ``(loop_parts, shrunk)``; the confs are a ``scoped_conf``
+    (restored on every exit; a concurrent scope from another thread
+    raises)."""
     loop_parts = loop_shuffle_partitions(spark, n_rows, rows_per_partition)
-    shrunk = loop_parts == 1 or loop_parts < int(prev_parts)
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        if shrunk:
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    shrunk = loop_parts == 1 or loop_parts < default
+    conf = {"spark.sql.shuffle.partitions": str(loop_parts)}
+    if shrunk:
+        conf["spark.sql.adaptive.enabled"] = "false"
+        conf["spark.sql.codegen.wholeStage"] = "false"
+    with scoped_conf(spark, conf):
         yield loop_parts, shrunk
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.codegen.wholeStage", prev_cg)
+
+
+# State shards of a streaming query = shuffle partitions at its start,
+# each with a state-store instance. The streaming replays here are a
+# few files per trigger, so they run at most this many shards (32
+# local shards cost ~6 s of pure store setup for a one-file replay);
+# a real deployment sizes this UP with the rate.
+STREAM_SHUFFLE_PARTITIONS_CAP = 8
+
+
+def stream_conf(spark: SparkSession):
+    """``scoped_conf`` capping shuffle partitions at
+    ``STREAM_SHUFFLE_PARTITIONS_CAP``; wrap stream construction,
+    ``start`` and ``stop`` in it."""
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return scoped_conf(spark, {
+        "spark.sql.shuffle.partitions":
+            str(min(parts, STREAM_SHUFFLE_PARTITIONS_CAP)),
+    })
 
 
 def get_spark(
@@ -129,6 +187,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # events.ts may be TIMESTAMP(NANOS), which the vectorized reader
+        # rejects; read it as a long (sources.load_table truncates it to
+        # micros). Only INT64 TIMESTAMP(NANOS) columns are affected, and
+        # no other file the engine reads carries one.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # honor bucketed tables' write-time sortBy, so a bucketed SMJ
+        # plans with zero Sort. Unsound only when a bucket spans several
+        # files; the only bucketBy tables are sources.ensure_bucketed's,
+        # written one file per bucket — the documented safe case.
+        .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -82,10 +82,9 @@ def bucketed_pair(
     exchange-free sort-merge join."""
     lt = ensure_bucketed(spark, sf_dir, left[0], left[1], num_buckets)
     rt = ensure_bucketed(spark, sf_dir, right[0], right[1], num_buckets)
-    # Honor the write-time sortBy so the SMJ plans with zero Sort as
-    # well as zero Exchange. Spark ignores bucketed sort metadata by
-    # default because it is unsound when a bucket spans multiple files;
-    # ensure_bucketed's repartition(num_buckets, key) guarantees exactly
-    # one file per bucket, which is the documented safe case.
-    spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+    # The SMJ plans with zero Sort as well as zero Exchange because the
+    # session honors the write-time sortBy
+    # (spark.sql.legacy.bucketedTableScan.outputOrdering, set by
+    # session.get_spark): ensure_bucketed's repartition(num_buckets,
+    # key) writes exactly one file per bucket, the documented safe case.
     return spark.table(lt), spark.table(rt)

@@ -39,10 +39,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     expressions (``unix_micros``, windows) and the DuckDB oracle agree:
 
     * TIMESTAMP(NANOS): Spark's vectorized reader rejects it outright
-      ([PARQUET_TYPE_ILLEGAL]); read via the legacy nanos-as-long path
-      and truncate to micros with integer division — exactly what
-      DuckDB does reading the same file. (Float division would be
-      wrong: ~1.7e18 ns exceeds double's 53-bit exact-integer range.)
+      ([PARQUET_TYPE_ILLEGAL]); the session reads it via the legacy
+      nanos-as-long path (``spark.sql.legacy.parquet.nanosAsLong``, set
+      by ``session.get_spark``), and this truncates to micros with
+      integer division — exactly what DuckDB does reading the same
+      file. (Float division would be wrong: ~1.7e18 ns exceeds
+      double's 53-bit exact-integer range.)
     * TIMESTAMP(MICROS) without timezone: Spark 4 infers TIMESTAMP_NTZ,
       which type-strict functions like ``unix_micros`` reject; cast to
       TIMESTAMP — value-preserving because the session timezone is
@@ -52,7 +54,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(path)
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

@@ -617,3 +617,20 @@ def test_solver_path_is_recorded(spark, use_path):
                      pagerank(edges, check_every=10, stats=stats).collect()}
         assert stats == {"iterations_run": 10, "path": path}
     assert got["driver"] == got["distributed"]
+
+
+def test_crawl_pagerank_values_pin_on_both_paths(spark, use_path):
+    """``crawl_pagerank`` sets no conf regime of its own: its VALUES pin
+    holds on the driver solve and on the distributed loop (which runs
+    under ``session.loop_conf``)."""
+    import duckdb
+    from conftest import SF_ORACLE
+
+    import __spark_entry__ as E
+
+    want = sorted((u, float(r)) for u, r in
+                  duckdb.sql(E.oracle_sql()["crawl_pagerank"]).fetchall())
+    for path in PATHS:
+        use_path(path)
+        got = E.queries()["crawl_pagerank"](spark, SF_ORACLE)
+        assert sorted(map(tuple, got.collect())) == want, path

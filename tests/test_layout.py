@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from crawler_spark.operators.layout import write_zordered, zorder_key
+from crawler_spark.session import scoped_conf
 
 N_FILES = 16
 
@@ -87,15 +88,10 @@ def test_zorder_file_membership_deterministic(spark, tmp_path):
             by_file.setdefault(r.f, set()).add(r.id)
         return {frozenset(v) for v in by_file.values()}
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        a_path, b_path = str(tmp_path / "za"), str(tmp_path / "zb")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        write_zordered(df, a_path, "x", "y", n_files=8)
-        spark.conf.set("spark.sql.shuffle.partitions", "13")
-        write_zordered(df, b_path, "x", "y", n_files=8)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    a_path, b_path = str(tmp_path / "za"), str(tmp_path / "zb")
+    for path, parts in ((a_path, "8"), (b_path, "13")):
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": parts}):
+            write_zordered(df, path, "x", "y", n_files=8)
     a, b = membership(a_path), membership(b_path)
     assert a == b
     assert len(a) == 8

@@ -373,16 +373,13 @@ class TestClusterSizeInvariance:
     @pytest.mark.parametrize("name", _INVARIANCE_QUERIES)
     def test_result_independent_of_partitioning(self, spark, name):
         import __spark_entry__ as E
+        from crawler_spark.session import scoped_conf
 
         fn = E.queries()[name]
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            res = {}
-            for parts in ("3", "29"):
-                spark.conf.set("spark.sql.shuffle.partitions", parts)
+        res = {}
+        for parts in ("3", "29"):
+            with scoped_conf(spark, {"spark.sql.shuffle.partitions": parts}):
                 res[parts] = sorted(map(tuple, fn(spark, SF).collect()))
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         assert res["3"] == res["29"], name
 
 
