@@ -540,9 +540,10 @@ def streaming_index_append_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Normalized events replay directory, written once per (process,
-# sf_dir): the raw events.parquet carries TIMESTAMP(NANOS) which
-# readStream's vectorized reader rejects, so the stream replays a
-# load_table-normalized multi-file copy (4 files → 4 micro-batches,
+# sf_dir): the raw events.ts is TIMESTAMP(NANOS) in some testdata
+# versions, which readStream's vectorized reader rejects, and
+# TIMESTAMP_NTZ micros in others (the sf0.001/0.01/0.1 sets), so the
+# stream replays a load_table-normalized multi-file copy (4 files → 4 micro-batches,
 # real cross-batch session-state merging).
 _EVENT_REPLAY_DIRS: dict[str, str] = {}
 

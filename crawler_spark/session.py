@@ -9,10 +9,11 @@ Spark default of 200 (wrong in both directions: over-parallelized
 locally, under-parallelized on a 1000-executor cluster — production
 deployments should raise it alongside AQE's coalescing).
 
-Confs that change after the session is built change only through
+Confs that change after the session is built change only here: through
 ``scoped_conf`` (and its two policies, ``loop_conf`` and
-``stream_conf``): scoped, restored on every exit, and single-threaded
-per session by enforcement.
+``stream_conf``) — scoped, restored on every exit, and single-threaded
+per session by enforcement — or through ``set_read_confs``, the fixed
+read-side values a source sets before it reads.
 """
 
 from __future__ import annotations
@@ -156,6 +157,31 @@ def stream_conf(spark: SparkSession):
     })
 
 
+# Read-side confs with one fixed value for the session's life. Not a
+# regime: constant and idempotent, so a source sets them before it
+# reads (``set_read_confs``) and they hold in any session, including
+# one not built by ``get_spark``.
+READ_CONFS = {
+    # events.ts may be TIMESTAMP(NANOS), which the vectorized reader
+    # rejects; read it as a long (sources.load_table truncates it to
+    # micros). Only INT64 TIMESTAMP(NANOS) columns are affected, and
+    # no other file the engine reads carries one.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Honor bucketed tables' write-time sortBy, so a bucketed SMJ plans
+    # with zero Sort. Unsound only when a bucket spans several files;
+    # the only bucketBy tables are sources.ensure_bucketed's, written
+    # one file per bucket — the documented safe case.
+    "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
+}
+
+
+def set_read_confs(spark: SparkSession) -> None:
+    """Set ``READ_CONFS`` on the session (never restored: the values
+    are session-wide and the same for every reader)."""
+    for k, v in READ_CONFS.items():
+        spark.conf.set(k, v)
+
+
 def get_spark(
     app_name: str = "crawler_spark",
     cpus: int | None = None,
@@ -187,16 +213,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # events.ts may be TIMESTAMP(NANOS), which the vectorized reader
-        # rejects; read it as a long (sources.load_table truncates it to
-        # micros). Only INT64 TIMESTAMP(NANOS) columns are affected, and
-        # no other file the engine reads carries one.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # honor bucketed tables' write-time sortBy, so a bucketed SMJ
-        # plans with zero Sort. Unsound only when a bucket spans several
-        # files; the only bucketBy tables are sources.ensure_bucketed's,
-        # written one file per bucket — the documented safe case.
-        .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

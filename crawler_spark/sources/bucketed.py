@@ -27,6 +27,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from crawler_spark.session import set_read_confs
 from crawler_spark.sources.tables import load_table
 
 SCRATCH_DIR = os.environ.get(
@@ -82,9 +83,7 @@ def bucketed_pair(
     exchange-free sort-merge join."""
     lt = ensure_bucketed(spark, sf_dir, left[0], left[1], num_buckets)
     rt = ensure_bucketed(spark, sf_dir, right[0], right[1], num_buckets)
-    # The SMJ plans with zero Sort as well as zero Exchange because the
-    # session honors the write-time sortBy
-    # (spark.sql.legacy.bucketedTableScan.outputOrdering, set by
-    # session.get_spark): ensure_bucketed's repartition(num_buckets,
-    # key) writes exactly one file per bucket, the documented safe case.
+    # Honor the write-time sortBy (session.set_read_confs) so the SMJ
+    # plans with zero Sort as well as zero Exchange.
+    set_read_confs(spark)
     return spark.table(lt), spark.table(rt)

@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from crawler_spark.session import set_read_confs
+
 TABLES = [
     "region",
     "nation",
@@ -39,9 +41,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     expressions (``unix_micros``, windows) and the DuckDB oracle agree:
 
     * TIMESTAMP(NANOS): Spark's vectorized reader rejects it outright
-      ([PARQUET_TYPE_ILLEGAL]); the session reads it via the legacy
-      nanos-as-long path (``spark.sql.legacy.parquet.nanosAsLong``, set
-      by ``session.get_spark``), and this truncates to micros with
+      ([PARQUET_TYPE_ILLEGAL]); read it via the legacy nanos-as-long
+      path (``session.set_read_confs``) and truncate to micros with
       integer division — exactly what DuckDB does reading the same
       file. (Float division would be wrong: ~1.7e18 ns exceeds
       double's 53-bit exact-integer range.)
@@ -54,6 +55,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
+        set_read_confs(spark)
         df = spark.read.parquet(path)
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

@@ -165,7 +165,39 @@ def test_no_conf_set_outside_session_py():
         and any(s in p.read_text() for s in ("conf.set(", "conf.unset("))
     )
     assert offenders == [], (
-        "set session confs through crawler_spark.session.scoped_conf")
+        "set session confs through crawler_spark.session (scoped_conf, "
+        "or set_read_confs for the fixed read-side values)")
+
+
+def test_readers_set_their_read_confs_in_any_session(spark, tmp_path):
+    """``load_table`` and ``bucketed_pair`` set the read confs they rely
+    on, so a session that starts without them (one not built by
+    ``get_spark``) still reads TIMESTAMP(NANOS) events and plans a
+    bucketed join with zero Sort."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from crawler_spark.session import READ_CONFS
+    from crawler_spark.sources import load_table
+    from crawler_spark.sources.bucketed import bucketed_pair
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999]
+    pq.write_table(
+        pa.table({"ts": pa.array(ns, type=pa.timestamp("ns"))}),
+        str(tmp_path / "events.parquet"), version="2.6")
+    off = {k: "false" for k in READ_CONFS}
+    with scoped_conf(spark, off):
+        ev = load_table(spark, str(tmp_path), "events")
+        got = [r[0] for r in ev.select(F.unix_micros("ts")).collect()]
+        assert got == [n // 1000 for n in ns]
+    with scoped_conf(spark, off):
+        l, o = bucketed_pair(
+            spark, SF, ("lineitem", "l_orderkey"), ("orders", "o_orderkey"),
+            num_buckets=4)
+        plan = l.join(o.hint("merge"), l.l_orderkey == o.o_orderkey)._jdf \
+            .queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" in plan and "Sort [" not in plan, plan
 
 
 @pytest.mark.parametrize("name, builder", [
