@@ -122,14 +122,3 @@ def url_domain(url: str) -> str | None:
         return urlparse(url).netloc or None
     except Exception:
         return None
-
-
-def domain_allowed(url: str, allowed_domains: list[str] | None) -> bool:
-    """Scrapy OffsiteMiddleware rule: exact domain or subdomain match."""
-    if not allowed_domains:
-        return True
-    host = url_domain(url)
-    if not host:
-        return False
-    host = host.split(":")[0].lower()
-    return any(host == d or host.endswith("." + d) for d in (x.lower() for x in allowed_domains))

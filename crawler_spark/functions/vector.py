@@ -95,34 +95,6 @@ def neg_dot(col: ColumnOrName, query: Column) -> Column:
     return -dot(col, query)
 
 
-def cosine_similarity(a: ColumnOrName, b: ColumnOrName | Column) -> Column:
-    bcol = (b if isinstance(b, Column) else _c(b)).cast("array<double>")
-
-    def _sumsq(arr: Column) -> Column:
-        return F.aggregate(arr, F.lit(0.0).cast("double"),
-                           lambda acc, x: acc + x * x)
-
-    # both arrays and the denominator bound once — the when/otherwise
-    # referenced denom twice, each re-running two O(d) norm folds
-    return bind_once(
-        to_double_array(a),
-        lambda aa: bind_once(
-            bcol,
-            lambda bb: bind_once(
-                F.sqrt(_sumsq(aa)) * F.sqrt(_sumsq(bb)),
-                lambda denom: F.when(denom == 0.0, F.lit(0.0)).otherwise(
-                    F.aggregate(
-                        F.zip_with(aa, bb, lambda x, y: x * y),
-                        F.lit(0.0).cast("double"),
-                        lambda acc, x: acc + x,
-                    )
-                    / denom
-                ),
-            ),
-        ),
-    )
-
-
 # --- int8 scalar quantization (SQ8) ---------------------------------------
 def sq8_scale(col: ColumnOrName) -> Column:
     """Per-vector SQ8 scale: max|x| / 127 (0 for the zero vector)."""

@@ -386,9 +386,16 @@ def hyperplane_projections(
     multiplies/divides are the same IEEE-double ops, so the normalized
     vector, every projection, sign bit, bucket, and pinned histogram
     downstream are bit-identical (locked by
-    tests/test_dedup.py::test_hyperplane_projection_kernel_bit_identical).
-    The UDF's input is a bare cast (no lambda in its child), so
-    Python-UDF extraction works in every consumer, including the
+    tests/test_dedup.py::test_hyperplane_projection_kernel_bit_identical),
+    up to the sign of a zero: the expression form's fold starts from
+    +0.0 (0.0 + p₁) while ``np.cumsum`` starts at p₁, so a projection
+    whose products are all −0.0 is −0.0 here and +0.0 there, which the
+    lock test's ``==`` cannot tell apart. That needs every product to be
+    zero — a zero plane component wherever the vector is non-zero, or a
+    zero vector against an all-negative plane — and has not been seen;
+    downstream reads only ``>= 0`` (sign bits) and ``abs`` (multi-probe
+    margins), which treat ±0.0 alike. The UDF's input is a bare cast
+    (no lambda in its child), so Python-UDF extraction works in every consumer, including the
     1-row query-banding probe. NULL semantics reproduced exactly: a
     NULL vector yields NULL v and all-NULL projections; any NULL
     element yields an all-NULL v of the same length and all-NULL
@@ -957,22 +964,6 @@ def connected_components_star(
                 "canonical_id"
             ),
         )
-    )
-
-
-def canonical_assignment(pairs: DataFrame, all_ids: DataFrame, id_col: str) -> DataFrame:
-    """Map every id to a canonical representative: min id among its
-    near-dup neighbors (single-hop union-find approximation — cheaper
-    than ``canonical_closure`` when duplicate clusters are known to be
-    pairs/triangles; use the closure when chains matter)."""
-    neighbors = pairs.select(F.col("id_a").alias("id"), F.col("id_b").alias("nb")).unionByName(
-        pairs.select(F.col("id_b").alias("id"), F.col("id_a").alias("nb"))
-    )
-    best = neighbors.groupBy("id").agg(F.min("nb").alias("min_nb"))
-    return (
-        all_ids.select(F.col(id_col).alias("id"))
-        .join(best, "id", "left")
-        .select("id", F.least(F.col("id"), F.coalesce("min_nb", "id")).alias("canonical_id"))
     )
 
 

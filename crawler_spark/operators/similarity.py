@@ -44,8 +44,103 @@ def knn_topk(
     out = df.select(*id_cols, V.neg_dot(emb, q).alias("distance"))
     if max_distance is not None:
         out = out.filter(F.col("distance") <= F.lit(float(max_distance)))
-    order = [F.col("distance").asc_nulls_last()] + [F.col(c).asc() for c in id_cols]
-    return out.orderBy(*order).limit(k)
+    return _topk(out, k, id_cols)
+
+
+# ------------------------------------------------ shared probe skeleton
+# Every ANN probe below is prune → (approximate score →) exact re-rank:
+# the pruning differs (band buckets, IVF lists, SQ8/PQ first passes),
+# the tail is these helpers. Their Column calls are part of every
+# probe's analyzed plan, which tools/plan_ledger.py and the plan-shape
+# locks pin: change them only with the ledger in view.
+def _topk(
+    df: DataFrame, k: int, id_cols: Sequence[str], dist: str = "distance",
+) -> DataFrame:
+    """The ordered top-k: ``dist`` ascending with NULLs last (a NULL
+    distance never displaces a real neighbor), ties broken by the id
+    columns in order, LIMIT k — one TakeOrderedAndProject, no shuffle
+    of the scored rows."""
+    order = [F.col(dist).asc_nulls_last()] + [F.col(c).asc() for c in id_cols]
+    return df.orderBy(*order).limit(k)
+
+
+def _exact_scores(
+    cand: DataFrame,
+    query_vec: Sequence[float],
+    id_col: str,
+    src_id: str | None = None,
+) -> DataFrame:
+    """(id_col, distance) with the exact distance -(v · q) of a
+    candidate frame carrying the normalized vector ``v``, against the
+    RAW query vector — the exact path (``knn_topk``) normalizes only the
+    stored side, so a normalized query would scale every distance by
+    1/||q|| and shift any max_distance-style threshold. ``src_id``
+    names the frame's id column when it is not ``id_col`` (the index
+    layouts store it as ``id``)."""
+    ident = F.col(id_col) if src_id is None else F.col(src_id).alias(id_col)
+    dist = V.neg_dot(F.col("v"), V.vector_lit(query_vec))
+    return cand.select(ident, dist.alias("distance"))
+
+
+def _dedup_topk(
+    scored: DataFrame, k: int, id_col: str, fanout: int,
+) -> DataFrame:
+    """Top-k over a scored frame in which an id can repeat up to
+    ``fanout`` times with an IDENTICAL (distance, id) row — a candidate
+    matching several probed buckets. The top k·fanout rows (one
+    TakeOrderedAndProject, no shuffle of the candidate set) must hold
+    ≥ k distinct ids; only those few rows are deduplicated, then cut
+    to k. A dropDuplicates before the top-k would shuffle the whole
+    candidate set."""
+    wide = _topk(scored, k * max(fanout, 1), (id_col,))
+    return _topk(wide.dropDuplicates([id_col]), k, (id_col,))
+
+
+def _nearest_lists(
+    centroids: Sequence[Sequence[float]],
+    query_vec: Sequence[float],
+    nprobe: int,
+) -> list[int]:
+    """Driver-side IVF list ranking: the ``nprobe`` (at least 1)
+    centroids nearest the normalized query by descending dot product
+    (a tiny C×d matmul)."""
+    import numpy as np
+
+    cmat = np.asarray(centroids, dtype=np.float64)
+    q = np.asarray(list(map(float, query_vec)), dtype=np.float64)
+    qn = q / np.linalg.norm(q) if np.linalg.norm(q) > 0 else q
+    return [int(p) for p in np.argsort(-(cmat @ qn))[: max(1, nprobe)]]
+
+
+def _write_partitioned(
+    df: DataFrame, path: str, part_cols: Sequence[str], mode: str,
+) -> None:
+    """The one partitioned parquet write of the ANN index layouts
+    (banded, IVF, IVFPQ — builds, appends and compaction): repartition
+    by the partition columns, then ``partitionBy`` them.
+
+    Without the repartition every input task opens a writer for every
+    directory it holds rows of, one after another — measured as the
+    dominant cost of a banded build at fixture scale (a file create and
+    commit is ~50 ms on a local FS), and ~60% of each append's wall.
+    After it each directory's rows hash to ONE task, so directories are
+    written in parallel, one file per directory per write (which is
+    what lets compaction coalesce a directory to one file). Probe
+    results are content-stable across file layouts, so this is
+    value-free.
+
+    Skew hazard: one task per IVF list or band bucket. IVF list sizes
+    follow the data (hot centroids), so at scale the largest list's
+    task serializes the write. The recipe there is a salt column —
+    ``repartition(*part_cols, pmod(xxhash64(id), n_salt))`` — which
+    bounds the files per directory at n_salt and keeps them parallel;
+    the fixtures' lists and 64 even buckets do not need it."""
+    (
+        df.repartition(*part_cols)
+        .write.mode(mode)
+        .partitionBy(*part_cols)
+        .parquet(path)
+    )
 
 
 def knn_topk_lsh(
@@ -82,26 +177,9 @@ def knn_topk_lsh(
     banded = hyperplane_bands(df, vec_col, id_col, num_planes, bands, seed)
     candidates = banded.join(F.broadcast(q_keys), ["band", "bucket"]).select(
         "id", "v")
-    # re-rank against the RAW query vector — the exact path (knn_topk)
-    # normalizes only the stored side, so using the banding's normalized
-    # query here would scale every distance by 1/||q|| and shift any
-    # max_distance-style threshold
-    dist = V.neg_dot(F.col("v"), V.vector_lit(query_vec))
-    scored = candidates.select(F.col("id").alias(id_col), dist.alias("distance"))
-    # a candidate matching m ≤ bands buckets appears m times with an
-    # IDENTICAL (distance, id) row — take the top k·bands rows first
-    # (TakeOrderedAndProject, no shuffle of the candidate set), which
-    # must contain ≥ k distinct ids, then dedup those few rows; the
-    # former dropDuplicates(id) BEFORE the top-k shuffled the whole
-    # candidate set (the exact rewrite knn_topk_precomputed already
-    # used — review-found divergence)
-    return (
-        scored.orderBy(F.col("distance").asc_nulls_last(), F.col(id_col).asc())
-        .limit(k * max(bands, 1))
-        .dropDuplicates([id_col])
-        .orderBy(F.col("distance").asc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
-    )
+    # a candidate matching m ≤ bands buckets appears m times
+    scored = _exact_scores(candidates, query_vec, id_col, src_id="id")
+    return _dedup_topk(scored, k, id_col, bands)
 
 
 def build_banded_index(
@@ -123,27 +201,11 @@ def build_banded_index(
     selective enough that a probe touches ~1/16th of the data per band.
 
     The index MUST be probed with the same (num_planes, bands, seed).
-
-    The write repartitions by the partition columns first (guide §6):
-    without it every input task opens a writer for ALL ~64 (band,
-    bucket) directories sequentially — measured as the dominant cost of
-    the build at fixture scale (file create/commit is ~50 ms each on a
-    local FS) — while after it the directories are spread across the
-    shuffle's tasks and written in parallel, one file per bucket.
-    Probe results are content-stable across file layouts, so this is
-    value-free. At extreme scale a hot bucket makes the single-task-
-    per-bucket shape a skew hazard; the production recipe is a salt
-    column in the repartition (bounded files per bucket, still
-    parallel), which the fixture's 64 even buckets do not need."""
+    Written by ``_write_partitioned`` (one file per bucket)."""
     from crawler_spark.operators.dedup import hyperplane_bands
 
     banded = hyperplane_bands(df, vec_col, id_col, num_planes, bands, seed)
-    (
-        banded.repartition("band", "bucket")
-        .write.mode("overwrite")
-        .partitionBy("band", "bucket")
-        .parquet(index_path)
-    )
+    _write_partitioned(banded, index_path, ("band", "bucket"), "overwrite")
 
 
 def knn_topk_precomputed(
@@ -205,20 +267,9 @@ def knn_topk_precomputed(
         [(F.col("band") == b) & (F.col("bucket") == v) for b, v in sorted(keys)],
     )
     candidates = spark.read.parquet(index_path).filter(cond)
-    dist = V.neg_dot(F.col("v"), V.vector_lit(query_vec))
-    scored = candidates.select(F.col("id").alias(id_col), dist.alias("distance"))
-    # a candidate matching m ≤ bands buckets appears m times with an
-    # IDENTICAL (distance, id) row — take the top k·bands rows first
-    # (TakeOrderedAndProject, no shuffle of the candidate set), which
-    # must contain ≥ k distinct ids, then dedup those few rows; this
-    # replaces a dropDuplicates shuffle over the whole candidate set
-    return (
-        scored.orderBy(F.col("distance").asc_nulls_last(), F.col(id_col).asc())
-        .limit(k * max(len(keys), 1))
-        .dropDuplicates([id_col])
-        .orderBy(F.col("distance").asc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
-    )
+    # a candidate matching m ≤ len(keys) probed buckets appears m times
+    scored = _exact_scores(candidates, query_vec, id_col, src_id="id")
+    return _dedup_topk(scored, k, id_col, len(keys))
 
 
 def _bounded_hash_sample(
@@ -412,18 +463,8 @@ def build_ivf_index(
         long_id(df, id_col).alias("id"), V.l2_normalize(vec_col).alias("v"),
         *payload_cols,
     )
-    # repartition by the partition column before the write (guide §6,
-    # same rationale as build_banded_index): inverted-list directories
-    # are written by parallel tasks instead of every input task
-    # opening all C writers sequentially; value-free (probes are
-    # content-stable across file layouts)
-    (
-        norm.withColumn("list_id", nearest_centroid_udf(centroids)("v"))
-        .repartition("list_id")
-        .write.mode("overwrite")
-        .partitionBy("list_id")
-        .parquet(index_path)
-    )
+    lists = norm.withColumn("list_id", nearest_centroid_udf(centroids)("v"))
+    _write_partitioned(lists, index_path, ("list_id",), "overwrite")
 
 
 def _probe_filter(
@@ -437,13 +478,7 @@ def _probe_filter(
     return the partition-pruning predicate for the ``nprobe`` nearest
     lists — an IN on the partition column, directory-level pruning at
     file listing, same physics as the ==-chain it replaces."""
-    import numpy as np
-
-    cmat = np.asarray(centroids, dtype=np.float64)
-    q = np.asarray(list(map(float, query_vec)), dtype=np.float64)
-    qn = q / np.linalg.norm(q) if np.linalg.norm(q) > 0 else q
-    probe = np.argsort(-(cmat @ qn))[: max(1, nprobe)]
-    return F.col("list_id").isin([int(p) for p in probe])
+    return F.col("list_id").isin(_nearest_lists(centroids, query_vec, nprobe))
 
 
 def knn_topk_ivf(
@@ -469,16 +504,12 @@ def knn_topk_ivf(
     recall beyond what nprobe already concedes — candidate count never
     caps out under a selective filter. Payload predicates also push
     down into the parquet scan of the probed lists."""
-    dist = V.neg_dot(F.col("v"), V.vector_lit(query_vec))
     scan = spark.read.parquet(index_path).filter(
         _probe_filter(centroids, query_vec, nprobe))
     if predicate is not None:
         scan = scan.filter(predicate)
-    return (
-        scan.select(F.col("id").alias(id_col), dist.alias("distance"))
-        .orderBy(F.col("distance").asc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return _topk(_exact_scores(scan, query_vec, id_col, src_id="id"),
+                 k, (id_col,))
 
 
 def knn_topk_batch_ivf(
@@ -503,15 +534,11 @@ def knn_topk_batch_ivf(
     k·partitions·Q rows. Distances are exact against the raw query
     vectors — recall is governed by nprobe exactly as in the
     single-query probe (nprobe = C ≡ exact, test-pinned)."""
-    import numpy as np
-
-    cmat = np.asarray(centroids, dtype=np.float64)
-    pairs = []
-    for qid, qv in enumerate(query_vecs):
-        q = np.asarray(list(map(float, qv)), dtype=np.float64)
-        qn = q / np.linalg.norm(q) if np.linalg.norm(q) > 0 else q
-        for p in np.argsort(-(cmat @ qn))[: max(1, nprobe)]:
-            pairs.append((qid, int(p)))
+    pairs = [
+        (qid, p)
+        for qid, qv in enumerate(query_vecs)
+        for p in _nearest_lists(centroids, qv, nprobe)
+    ]
     probe_df = spark.createDataFrame(pairs, "query_id long, list_id int")
     queries = spark.createDataFrame(
         [(i, list(map(float, v))) for i, v in enumerate(query_vecs)],
@@ -753,17 +780,9 @@ def knn_topk_sq8(
     ).withColumn("qv", V.sq8_quantize("v")).withColumn("scale", V.sq8_scale("v"))
 
     approx = V.sq8_neg_dot("qv", "scale", query_q, F.lit(qs))
-    cand = (
-        norm.select(id_col, "v", approx.alias("approx_distance"))
-        .orderBy(F.col("approx_distance").asc_nulls_last(), F.col(id_col).asc())
-        .limit(max(k, k * rerank_factor))
-    )
-    dist = V.neg_dot(F.col("v"), V.vector_lit(query_vec))
-    return (
-        cand.select(id_col, dist.alias("distance"))
-        .orderBy(F.col("distance").asc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
-    )
+    cand = _topk(norm.select(id_col, "v", approx.alias("approx_distance")),
+                 max(k, k * rerank_factor), (id_col,), "approx_distance")
+    return _topk(_exact_scores(cand, query_vec, id_col), k, (id_col,))
 
 
 def semantic_dedup_pairs(
@@ -1023,17 +1042,9 @@ def knn_topk_pq(
     ).withColumn("codes", pq_encode_udf(codebooks)("v"))
 
     adc = pq_adc_distance("codes", codebooks, query_vec)
-    cand = (
-        norm.select(id_col, "v", adc.alias("approx_distance"))
-        .orderBy(F.col("approx_distance").asc_nulls_last(), F.col(id_col).asc())
-        .limit(max(k, k * rerank_factor))
-    )
-    dist = V.neg_dot(F.col("v"), V.vector_lit(query_vec))
-    return (
-        cand.select(id_col, dist.alias("distance"))
-        .orderBy(F.col("distance").asc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
-    )
+    cand = _topk(norm.select(id_col, "v", adc.alias("approx_distance")),
+                 max(k, k * rerank_factor), (id_col,), "approx_distance")
+    return _topk(_exact_scores(cand, query_vec, id_col), k, (id_col,))
 
 
 # ------------------------------------------- random projection (JL)
@@ -1114,17 +1125,11 @@ def knn_topk_ivfpq(
         .withColumn("codes", pq_encode_udf(codebooks)("v"))
     )
     adc = pq_adc_distance("codes", codebooks, query_vec)
-    cand = (
-        probed.select(F.col("id").alias(id_col), "v", adc.alias("approx_distance"))
-        .orderBy(F.col("approx_distance").asc_nulls_last(), F.col(id_col).asc())
-        .limit(max(k, k * rerank_factor))
-    )
-    dist = V.neg_dot(F.col("v"), V.vector_lit(query_vec))
-    return (
-        cand.select(id_col, dist.alias("distance"))
-        .orderBy(F.col("distance").asc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
-    )
+    cand = _topk(
+        probed.select(F.col("id").alias(id_col), "v",
+                      adc.alias("approx_distance")),
+        max(k, k * rerank_factor), (id_col,), "approx_distance")
+    return _topk(_exact_scores(cand, query_vec, id_col), k, (id_col,))
 
 
 def append_banded_index(
@@ -1156,16 +1161,7 @@ def append_banded_index(
     from crawler_spark.operators.dedup import hyperplane_bands
 
     banded = hyperplane_bands(df, vec_col, id_col, num_planes, bands, seed)
-    # same parallel-writer repartition as build_banded_index (guide §6:
-    # one task otherwise opens all ~64 directory writers sequentially —
-    # measured as ~60% of each append's wall); value-free, probes are
-    # content-stable across file layouts
-    (
-        banded.repartition("band", "bucket")
-        .write.mode("append")
-        .partitionBy("band", "bucket")
-        .parquet(index_path)
-    )
+    _write_partitioned(banded, index_path, ("band", "bucket"), "append")
 
 
 def compact_partitioned_index(
@@ -1215,13 +1211,9 @@ def compact_partitioned_index(
 
     tmp_root = index_path.rstrip("/") + "__compact_tmp"
     shutil.rmtree(tmp_root, ignore_errors=True)
-    (
-        spark.read.option("basePath", index_path).parquet(*touched)
-        .repartition(len(touched), *partition_cols)
-        .write.mode("overwrite")
-        .partitionBy(*partition_cols)
-        .parquet(tmp_root)
-    )
+    _write_partitioned(
+        spark.read.option("basePath", index_path).parquet(*touched),
+        tmp_root, partition_cols, "overwrite")
     # Displaced originals go to a trash SIBLING, never `<dir>__old`
     # inside the index: a stray dir under the root corrupts partition
     # discovery (a string '2__old' value breaks the int partition
@@ -1285,13 +1277,11 @@ def build_ivfpq_index(
     norm = df.select(
         long_id(df, id_col).alias("id"), V.l2_normalize(vec_col).alias("v")
     )
-    (
+    coded = (
         norm.withColumn("list_id", nearest_centroid_udf(centroids)("v"))
         .withColumn("codes", pq_encode_udf(codebooks)("v"))
-        .write.mode("overwrite")
-        .partitionBy("list_id")
-        .parquet(index_path)
     )
+    _write_partitioned(coded, index_path, ("list_id",), "overwrite")
 
 
 def knn_topk_ivfpq_indexed(
@@ -1314,21 +1304,14 @@ def knn_topk_ivfpq_indexed(
     in-plan): same answers, serving-shaped physics."""
     cond = _probe_filter(centroids, query_vec, nprobe)
     adc = pq_adc_distance("codes", codebooks, query_vec)
-    cand = (
-        spark.read.parquet(index_path)
-        .filter(cond)
-        .select("id", adc.alias("approx_distance"))  # codes-only scan
-        .orderBy(F.col("approx_distance").asc_nulls_last(), F.col("id").asc())
-        .limit(max(k, k * rerank_factor))
-    )
+    cand = _topk(
+        spark.read.parquet(index_path).filter(cond)
+        .select("id", adc.alias("approx_distance")),  # codes-only scan
+        max(k, k * rerank_factor), ("id",), "approx_distance")
     raw = spark.read.parquet(index_path).filter(cond).select("id", "v")
-    dist = V.neg_dot(F.col("v"), V.vector_lit(query_vec))
-    return (
-        raw.join(F.broadcast(cand.select("id")), "id")
-        .select(F.col("id").alias(id_col), dist.alias("distance"))
-        .orderBy(F.col("distance").asc_nulls_last(), F.col(id_col).asc())
-        .limit(k)
-    )
+    survivors = raw.join(F.broadcast(cand.select("id")), "id")
+    return _topk(_exact_scores(survivors, query_vec, id_col, src_id="id"),
+                 k, (id_col,))
 
 
 def mmr_rerank(
@@ -1363,12 +1346,10 @@ def mmr_rerank(
 
     q = V.vector_lit(query_vec)
     emb = V.l2_normalize(vec_col)
-    cand = (
-        df.select(F.col(id_col), emb.alias("v"), V.neg_dot(emb, q).alias("distance"))
-        .orderBy(F.col("distance").asc_nulls_last(), F.col(id_col).asc())
-        .limit(fetch_k)
-        .collect()
-    )
+    cand = _topk(
+        df.select(F.col(id_col), emb.alias("v"),
+                  V.neg_dot(emb, q).alias("distance")),
+        fetch_k, (id_col,)).collect()
     spark = df.sparkSession
     # Preserve the caller's id type (string ids are legal here, as in
     # knn_topk) instead of hardcoding long.
@@ -1431,12 +1412,8 @@ def append_ivf_index(
 
     v = (F.col(vec_col) if pre_normalized else V.l2_normalize(vec_col))
     norm = df.select(long_id(df, id_col).alias("id"), v.alias("v"))
-    (
-        norm.withColumn("list_id", nearest_centroid_udf(centroids)("v"))
-        .write.mode("append")
-        .partitionBy("list_id")
-        .parquet(index_path)
-    )
+    lists = norm.withColumn("list_id", nearest_centroid_udf(centroids)("v"))
+    _write_partitioned(lists, index_path, ("list_id",), "append")
 
 
 def semantic_dedup_ingest_step(

@@ -183,20 +183,9 @@ class TestEmbeddingLSH:
                 df, "embedding", "vec_id", 16, 42).collect()}
             assert got == want  # exact float equality, no tolerance
 
-    def test_canonical_assignment(self, spark):
-        from crawler_spark.operators.dedup import canonical_assignment
-
-        pairs = spark.createDataFrame(
-            [(1, 5), (5, 9), (2, 7)], "id_a long, id_b long"
-        )
-        ids = spark.createDataFrame([(i,) for i in [1, 2, 5, 7, 9, 11]], "vec_id long")
-        got = {r.id: r.canonical_id
-               for r in canonical_assignment(pairs, ids, "vec_id").collect()}
-        assert got[1] == 1 and got[5] == 1 and got[7] == 2 and got[11] == 11
-
     def test_canonical_closure_follows_chains(self, spark):
-        """Multi-hop chains resolve to the component minimum — where the
-        1-hop approximation stops short (9's neighbors are only 5)."""
+        """Multi-hop chains resolve to the component minimum, also where
+        one hop stops short (9's neighbors are only 5)."""
         from crawler_spark.operators.dedup import canonical_closure
 
         pairs = spark.createDataFrame(

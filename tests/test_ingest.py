@@ -10,7 +10,7 @@ import math
 
 import pytest
 
-from crawler_spark.functions.html import domain_allowed, parse_html, url_domain
+from crawler_spark.functions.html import parse_html, url_domain
 from crawler_spark.sources.fetch import FlakyFetcher, StubFetcher
 from crawler_spark.sources.file_handlers import (
     STUB_PDF_MAGIC,
@@ -60,11 +60,20 @@ class TestHtmlParse:
         assert page.title == "ok"
         assert "text" in page.content
 
-    def test_domain_helpers(self):
+    def test_domain_helpers(self, spark):
+        from crawler_spark.plans.crawl import domain_allowed_col
+
         assert url_domain("https://a.b.c/path") == "a.b.c"
-        assert domain_allowed("https://sub.site.test/x", ["site.test"])
-        assert not domain_allowed("https://evil.test/x", ["site.test"])
-        assert domain_allowed("https://anything/x", None)
+        urls = spark.createDataFrame(
+            [("https://sub.site.test/x",), ("https://evil.test/x",),
+             ("https://anything/x",)], "url string")
+
+        def allowed(domains):
+            return [r.ok for r in urls.select(
+                domain_allowed_col("url", domains).alias("ok")).collect()]
+
+        assert allowed(["site.test"])[:2] == [True, False]
+        assert allowed(None)[2]
 
 
 class TestFileHandlers:

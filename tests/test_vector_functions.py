@@ -47,14 +47,6 @@ def test_dot_and_neg_dot(spark, vec_df):
     assert rows[1].d == 0.0
 
 
-def test_cosine_similarity(spark, vec_df):
-    q = V.vector_lit([4.0, 3.0])
-    rows = vec_df.select("id", V.cosine_similarity("v", q).alias("c")).orderBy("id").collect()
-    assert rows[0].c == pytest.approx(24.0 / 25.0)
-    assert rows[1].c == 0.0  # zero-vector guard
-    assert rows[2].c == pytest.approx(0.8)
-
-
 def test_stub_embedder_deterministic():
     from crawler_spark.functions.embedding import StubEmbedder, normalize_pad
 
@@ -587,39 +579,64 @@ def test_ivfpq_compose_exact_rerank_and_recall(spark, tmp_path):
     assert [r.vec_id for r in full] == list(exact_all)[:5]
 
 
-def test_append_banded_index_probe_sees_new_vectors(spark, tmp_path):
-    """Incremental index append: a new near-duplicate of the query
-    becomes top-1 after append, pre-existing results are otherwise
-    unchanged, and the appended index equals a from-scratch rebuild."""
+@pytest.mark.parametrize("layout", ["banded", "ivf"])
+def test_append_index_probe_sees_new_vectors(spark, tmp_path, layout):
+    """Incremental index append, for both index layouts: a new
+    near-duplicate of the query becomes top-1 after append,
+    pre-existing results are otherwise unchanged, and the appended index
+    equals a from-scratch rebuild over the unioned data (the IVF probe
+    at nprobe = C, so every list is read)."""
     from crawler_spark.operators.similarity import (
         append_banded_index,
+        append_ivf_index,
         build_banded_index,
+        build_ivf_index,
+        knn_topk_ivf,
         knn_topk_precomputed,
+        train_ivf_centroids,
     )
     from crawler_spark.plans.queries_vector import QUERY_VEC
     from crawler_spark.sources import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    idx = str(tmp_path / "banded")
-    build_banded_index(emb, idx)
-    before = knn_topk_precomputed(spark, idx, QUERY_VEC, k=5).collect()
+    if layout == "banded":
+        build, append = build_banded_index, append_banded_index
+
+        def probe(path):
+            return knn_topk_precomputed(spark, path, QUERY_VEC, k=5).collect()
+    else:
+        cents = train_ivf_centroids(emb, n_centroids=4)
+
+        def build(df, path):
+            build_ivf_index(df, path, cents)
+
+        def append(df, path):
+            append_ivf_index(df, path, cents)
+
+        def probe(path):
+            return knn_topk_ivf(
+                spark, path, cents, QUERY_VEC, k=5, nprobe=len(cents)).collect()
+
+    idx = str(tmp_path / layout)
+    build(emb, idx)
+    before = probe(idx)
 
     new = spark.createDataFrame(
         [(100_000, [float(x) for x in QUERY_VEC])],
         "vec_id long, embedding array<double>",
     )
-    append_banded_index(new, idx)
-    after = knn_topk_precomputed(spark, idx, QUERY_VEC, k=5).collect()
+    append(new, idx)
+    after = probe(idx)
     assert after[0].vec_id == 100_000
     assert after[0].distance == pytest.approx(-1.0, abs=1e-9)
     assert [r.vec_id for r in after[1:]] == [r.vec_id for r in before[:4]]
 
     # append ≡ rebuild over the unioned data
-    idx2 = str(tmp_path / "rebuilt")
+    idx2 = str(tmp_path / f"{layout}_rebuilt")
     base = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    build_banded_index(base.unionByName(new), idx2)
-    rebuilt = knn_topk_precomputed(spark, idx2, QUERY_VEC, k=5).collect()
+    build(base.unionByName(new), idx2)
+    rebuilt = probe(idx2)
     assert [(r.vec_id, r.distance) for r in rebuilt] == [
         (r.vec_id, r.distance) for r in after]
 
@@ -628,11 +645,13 @@ def test_batch_ivf_full_probe_equals_exact_batch(spark, tmp_path):
     """knn_topk_batch_ivf with nprobe = C must return, per query,
     EXACTLY the exact batch answer (same values, same tie-breaks) —
     the approximation lives only in nprobe. With nprobe < C every
-    returned distance is still the exact distance for its id."""
+    returned distance is still the exact distance for its id, and each
+    query's rows are the single-query ``knn_topk_ivf`` rows."""
     from crawler_spark.operators.similarity import (
         build_ivf_index,
         knn_topk,
         knn_topk_batch_ivf,
+        knn_topk_ivf,
         train_ivf_centroids,
     )
     from crawler_spark.plans.queries_vector import _BATCH_VECS
@@ -662,6 +681,12 @@ def test_batch_ivf_full_probe_equals_exact_batch(spark, tmp_path):
     for r in part:
         assert r.distance == pytest.approx(
             exact_all[(r.query_id, r.vec_id)], abs=1e-12)
+    # nprobe < C: the batch ranks each query's lists exactly as the
+    # single-query probe does, so its rows are that probe's rows
+    for qid, qv in enumerate(_BATCH_VECS):
+        single = knn_topk_ivf(spark, idx, cents, qv, k=5, nprobe=2).collect()
+        assert [(r.vec_id, r.distance) for r in part if r.query_id == qid] == [
+            (r.vec_id, r.distance) for r in single], f"query {qid}"
 
     # plan: rn<=k must take the WindowGroupLimit rewrite (map-side
     # per-query top-k before the exchange), and the probed-list filter
@@ -842,3 +867,24 @@ def test_knn_null_embedding_never_displaces_real_neighbors(spark):
     lsh = knn_topk_lsh(df, [1.0, 0.0], k=4).collect()
     real = [r for r in lsh if r.distance is not None]
     assert [r.vec_id for r in lsh[:len(real)]] == [r.vec_id for r in real]
+
+
+def test_partitioned_writes_only_through_write_partitioned():
+    """Every index write in operators/similarity.py goes through
+    ``_write_partitioned``, so each gets the repartition before
+    ``partitionBy`` and one file per directory."""
+    import ast
+    import inspect
+
+    import crawler_spark.operators.similarity as S
+
+    src = inspect.getsource(S)
+    tree = ast.parse(src)
+    owners = {}
+    for lineno, line in enumerate(src.splitlines(), start=1):
+        if ".write" in line:
+            fn = next((n.name for n in tree.body
+                       if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+                       and n.lineno <= lineno <= n.end_lineno), "<module>")
+            owners.setdefault(fn, []).append(lineno)
+    assert set(owners) == {"_write_partitioned"}, owners

@@ -140,6 +140,7 @@ SINK_SOURCES: dict[str, tuple[str, ...]] = {
     "streaming_sessionize_e2e": ("crawler_spark.streaming.event_stream",),
     "streaming_index_append_e2e": (
         "crawler_spark.operators.similarity:append_banded_index",
+        "crawler_spark.operators.similarity:_write_partitioned",
         "crawler_spark.operators.similarity:knn_topk_precomputed",
     ),
     "streaming_warc_ingest_e2e": (
@@ -157,6 +158,7 @@ SINK_SOURCES: dict[str, tuple[str, ...]] = {
     ),
     "streaming_semantic_dedup_e2e": (
         "crawler_spark.operators.similarity:build_ivf_index",
+        "crawler_spark.operators.similarity:_write_partitioned",
         "crawler_spark.operators.similarity:top_centroids_udf",
         "crawler_spark.operators.upsert:key_bucket",
         "crawler_spark.operators.upsert:merge_into_bucketed",
@@ -169,6 +171,7 @@ SINK_SOURCES: dict[str, tuple[str, ...]] = {
     "dedup_semantic_incremental": (
         "crawler_spark.operators.similarity:semantic_dedup_ingest_step",
         "crawler_spark.operators.similarity:append_ivf_index",
+        "crawler_spark.operators.similarity:_write_partitioned",
         "crawler_spark.operators.similarity:semantic_dedup_pairs",
         "crawler_spark.operators.similarity:top_centroids_udf",
         "crawler_spark.operators.dedup:canonical_closure",
