@@ -21,6 +21,8 @@ recall against them.
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -63,14 +65,14 @@ def minhash_signatures(
         F.col(id_col).alias("id"),
         F.explode(F.array_distinct(X.word_shingles(text_col, shingle_k))).alias("g"),
     )
-    aggs = [
-        F.min(F.xxhash64(F.concat(F.lit(f"mh{i}|"), F.col("g")))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
+    # SQL text, not F.* builders: the same analyzed plan in one Py4J
+    # call per aggregate instead of ~8 (the per-element construction
+    # cost was most of this operator's driver time)
+    aggs = [F.expr(f"min(xxhash64(concat('mh{i}|', g))) AS h{i}")
+            for i in range(num_hashes)]
     sig = grams.groupBy("id").agg(*aggs)
-    return sig.select(
-        "id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("signature")
-    )
+    hs = ", ".join(f"h{i}" for i in range(num_hashes))
+    return sig.selectExpr("id", f"array({hs}) AS signature")
 
 
 def _stream_bucket_pairs(groups: DataFrame, make_pair, pair_filter=None):
@@ -126,22 +128,18 @@ def minhash_lsh_pairs(
     # ×bands); singleton buckets — the overwhelming majority under a
     # 64-bit bucket hash — are dropped JVM-side before any pair work.
     # No banded self-join, no distinct over a candidate blow-up.
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.xxhash64(
-                        F.concat_ws(",", *[
-                            F.element_at("signature", b * rows_per_band + r + 1).cast("string")
-                            for r in range(rows_per_band)
-                        ])
-                    ).alias("bucket"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bb"),
+    # one SQL expression for the band structs (same analyzed plan as
+    # the F.* form, a few Py4J calls instead of hundreds)
+    structs = ", ".join(
+        f"struct({b} AS band, xxhash64(concat_ws(',', "
+        + ", ".join(
+            f"CAST(element_at(signature, {b * rows_per_band + r + 1}) AS STRING)"
+            for r in range(rows_per_band))
+        + ")) AS bucket)"
+        for b in range(bands)
+    )
+    banded = sig.selectExpr(
+        "id", f"explode(array({structs})) AS bb",
     ).select("id", "bb.band", "bb.bucket")
 
     groups = (
@@ -337,11 +335,15 @@ def _murmur3_int32(value: int, seed: int) -> int:
     return h - (1 << 32) if h >= (1 << 31) else h
 
 
-# (num_planes, dims, seed) → matrix; heavyweight-init-once per task
-# (guide §4.3) — the murmur replica is pure Python, ~1k calls per build
-_PLANE_MATRIX_CACHE: dict = {}
+# (num_planes, dims, seed) → matrix, built once per worker process
+# (guide §4.3) — the murmur replica is pure Python, ~1k calls per
+# build. Bounded by functools.lru_cache, as sources/tables.py bounds
+# its schema cache: a long-lived worker serving many dimensionalities
+# would otherwise keep every matrix it ever built.
+PLANE_MATRIX_CACHE_ENTRIES = 32
 
 
+@functools.lru_cache(maxsize=PLANE_MATRIX_CACHE_ENTRIES)
 def _plane_matrix(num_planes: int, dims: int, seed: int):
     """The (num_planes × dims) hyperplane component matrix, each entry
     exactly ``hash(seed, plane, j) / 2^31`` as the in-expression form
@@ -426,11 +428,7 @@ def hyperplane_projections(
             else:
                 by_d.setdefault(len(v), []).append(i)
         for d, idxs in by_d.items():
-            key = (num_planes, d, seed)
-            M = _PLANE_MATRIX_CACHE.get(key)
-            if M is None:
-                M = _PLANE_MATRIX_CACHE[key] = _plane_matrix(
-                    num_planes, d, seed)
+            M = _plane_matrix(num_planes, d, seed)
             # bound the (rows × planes × dims) cumsum intermediate to
             # ~16 MB regardless of batch size or dimensionality (guide
             # §5 — executor memory; chunking across ROWS cannot change

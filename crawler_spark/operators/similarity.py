@@ -638,6 +638,13 @@ def knn_topk_filtered(
                         k=k, nprobe=nprobe, id_col=id_col, predicate=pred)
 
 
+# cosine_pairs_exact's default blocking: estimated input bytes per
+# block, and a ceiling for inputs without a size estimate (a
+# checkpointed frame reports spark.sql.defaultSizeInBytes)
+COSINE_BLOCK_BYTES = 1 << 20
+COSINE_MAX_BLOCKS = 64
+
+
 def cosine_pairs_exact(
     df: DataFrame,
     threshold: float,
@@ -662,8 +669,10 @@ def cosine_pairs_exact(
     triggers zero Spark jobs) and every stage is distributed.
 
     Memory per task = two blocks (2·(n/B)·d·8 bytes) plus a chunked
-    similarity tile; B defaults to √(2·parallelism) so the block-pair
-    count matches the cluster. ``id_col`` must be integral (fail-fast
+    similarity tile. B defaults to the input's plan-estimated size in
+    COSINE_BLOCK_BYTES units (from file sizes, no job), between 2 and
+    COSINE_MAX_BLOCKS: a block stays near that size as n grows, and the
+    plan is the same on any core count. ``id_col`` must be integral (fail-fast
     otherwise); hash string ids with xxhash64 first. For data too large
     even blocked, the LSH variant (operators/dedup.py) prunes
     candidates instead of touching the full pair space.
@@ -675,8 +684,11 @@ def cosine_pairs_exact(
 
     thr = float(threshold)
     if num_blocks is None:
-        par = df.sparkSession.sparkContext.defaultParallelism
-        num_blocks = max(2, int(math.isqrt(2 * par)))
+        from crawler_spark.session import data_partitions
+
+        est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        num_blocks = min(COSINE_MAX_BLOCKS,
+                         max(2, data_partitions(int(est), COSINE_BLOCK_BYTES)))
     B = num_blocks
 
     norm = df.select(

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from crawler_spark import schemas
 from crawler_spark.functions.embedding import StubEmbedder
-from crawler_spark.sources.fetch import Fetcher
+from crawler_spark.sources.fetch import FETCH_TASKS_MAX, Fetcher
 from crawler_spark.sources.file_handlers import classify_content_type, extract_pdf_text
 
 
@@ -38,7 +38,8 @@ def fetch_frontier(
     The fetcher is pickled into the closure (stub: in-memory dict;
     http: config only) — each partition fetches its slice, so crawl
     concurrency is partition parallelism, the Spark analogue of the
-    reference's CONCURRENT_REQUESTS (crawlers/README.md:298-321).
+    reference's CONCURRENT_REQUESTS (crawlers/README.md:298-321): one
+    url per task, up to ``FETCH_TASKS_MAX`` tasks.
 
     ``per_host_delay`` > 0 is the DOWNLOAD_DELAY politeness analogue
     (crawlers/README.md:298-321): urls are partitioned by HOST HASH so
@@ -83,8 +84,7 @@ def fetch_frontier(
                 )
             yield pd.DataFrame(rows, columns=["url", "content_type", "body", "fetch_error"])
 
-    par = spark.sparkContext.defaultParallelism
-    n_parts = max(1, min(len(urls), par))
+    n_parts = max(1, min(len(urls), FETCH_TASKS_MAX))
     if per_host_delay > 0:
         part = frontier.repartition(
             n_parts, F.lower(F.parse_url("url", F.lit("HOST")))
@@ -152,9 +152,9 @@ def robots_filter(
                 {"url": pdf["url"], "allowed": [allowed[u] for u in pdf["url"]]}
             )
 
-    par = spark.sparkContext.defaultParallelism
     return (
-        df.repartition(max(1, min(len(urls), par)), F.parse_url("url", F.lit("HOST")))
+        df.repartition(max(1, min(len(urls), FETCH_TASKS_MAX)),
+                       F.parse_url("url", F.lit("HOST")))
         .mapInPandas(check, schema="url string, allowed boolean")
     )
 

@@ -29,6 +29,7 @@ from crawler_spark.functions import text as X
 from crawler_spark.functions import url as U
 from crawler_spark.plans.queries_text import _FP_SQL, _TOKENS_SQL
 from crawler_spark.plans.registry import register
+from crawler_spark.session import LOOP_ROWS_PER_PARTITION, data_partitions
 from crawler_spark.sources import load_table
 
 # Deterministic doc key shared with queries_mlprep.py's hash sampling:
@@ -854,6 +855,8 @@ def corpus_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- the full curation funnel: one query, per-stage survivor counts -------
 _FUNNEL_STOPWORDS = ["the", "of", "and", "to", "in", "a", "is", "that"]
+# survivors per task of the funnel's shingle stage
+_FUNNEL_ROWS_PER_TASK = 256
 
 
 @register(
@@ -990,7 +993,7 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         # inherits the scan's input split count (ONE task on the
         # single-row-group fixture), and the shingle projection feeding
         # the pair join is the funnel's hottest expression
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        .repartition(data_partitions(gop.count(), _FUNNEL_ROWS_PER_TASK), "doc_id")
         .localCheckpoint()
     )
 
@@ -1424,7 +1427,7 @@ def curation_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.withColumn("raw", judge_udf()(F.col("text")))
         .select("doc_id", parse_judgment("raw")["score"].alias("score"))
     )
-    cuts = spark.range(0, 101, 10).select(
+    cuts = spark.range(0, 101, 10, numPartitions=1).select(
         F.col("id").cast("int").alias("cutoff"))
     return (
         scored.crossJoin(F.broadcast(cuts))
@@ -1550,7 +1553,10 @@ def curation_url_blocklist_big(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged from ``curation_url_blocklist``."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     d = docs.select("doc_id", _bl_domain().alias("domain"))
-    bl = spark.range(_BLOCKLIST_BIG_N).select(
+    bl = spark.range(
+        _BLOCKLIST_BIG_N,
+        numPartitions=data_partitions(_BLOCKLIST_BIG_N, LOOP_ROWS_PER_PARTITION),
+    ).select(
         F.concat(
             F.lit("blk"),
             F.lpad(F.col("id").cast("string"), 5, "0"),

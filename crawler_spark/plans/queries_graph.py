@@ -49,8 +49,8 @@ _EDGES_SQL = f"""
 """
 
 
-def _event_cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
+def _event_cooccurrence_edges(ev: DataFrame) -> DataFrame:
+    """Undirected co-occurrence edges (u < v) of the events frame."""
     buckets = ev.select(
         "user_id",
         "event_type",
@@ -77,7 +77,7 @@ def graph_cooccur_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     screen for bot rings (degree far above the population) and
     isolates (degree 0 users don't appear: they have no edge). Output
     is node-cardinality, never edge-cardinality."""
-    edges = _event_cooccurrence_edges(spark, sf_dir)
+    edges = _event_cooccurrence_edges(load_table(spark, sf_dir, "events"))
     return (
         edges.select(F.col("u").alias("user_id"))
         .unionByName(edges.select(F.col("v").alias("user_id")))
@@ -120,7 +120,8 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators/graph.py:triangle_stats``); the oracle proves the
     count with the naive id-ordered 3-way self-join, which is exactly
     the orientation-invariance of the triangle total."""
-    return triangle_stats(_event_cooccurrence_edges(spark, sf_dir))
+    return triangle_stats(
+        _event_cooccurrence_edges(load_table(spark, sf_dir, "events")))
 
 
 # --- seed-cohort influence via personalized PageRank ----------------------
@@ -144,15 +145,15 @@ def graph_influence_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     the serving shape of a seed-expansion query."""
     from crawler_spark.operators.graph import personalized_pagerank
 
-    und = _event_cooccurrence_edges(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
+    und = _event_cooccurrence_edges(ev)
     # the projection emits each undirected edge once (u < v); the walk
     # is directed, so symmetrize before iterating
     edges = und.unionByName(
         und.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
     seeds = (
-        load_table(spark, sf_dir, "events")
-        .select(F.col("user_id").alias("id"))
+        ev.select(F.col("user_id").alias("id"))
         .where(F.col("user_id") % 50 == 0)
         .distinct()
     )

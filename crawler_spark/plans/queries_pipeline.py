@@ -21,6 +21,17 @@ from crawler_spark.sources.fetch import StubFetcher
 from crawler_spark.sources.file_handlers import STUB_PDF_MAGIC
 
 
+def _sink_name(prefix: str) -> str:
+    """A fresh memory-sink name ``<prefix>_a<7 hex>``. The suffix is
+    random per construction, and its fixed leading letter keeps it
+    recognizably hex: an all-digit suffix (2.3% of bare 8-hex draws)
+    would read as a deliberate numeric alias and stay in the canonical
+    plan (tools/plan_ledger.py)."""
+    import uuid
+
+    return f"{prefix}_a{uuid.uuid4().hex[:7]}"
+
+
 def _page(title: str, body: str, links: list[str]) -> tuple[str, bytes]:
     anchors = "".join(f'<a href="{l}">x</a>' for l in links)
     return ("text/html",
@@ -115,7 +126,6 @@ def streaming_neardup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     band explode, applyInPandasWithState sharding, verdict reduce)
     end-to-end on real data."""
     import tempfile
-    import uuid
 
     from crawler_spark.sources import load_table
     from crawler_spark.streaming.neardup_stream import (
@@ -123,7 +133,7 @@ def streaming_neardup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_neardup_verdicts,
     )
 
-    name = f"neardup_e2e_{uuid.uuid4().hex[:8]}"
+    name = _sink_name("neardup_e2e")
     schema = load_table(spark, sf_dir, "documents").select("doc_id", "text").schema
     # state shards sized to the stream, not the batch default
     with stream_conf(spark):
@@ -187,14 +197,13 @@ def streaming_dedup_horizon_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     is plan/partition-order dependent within a micro-batch; which-copy
     -wins discipline is the batch keep-best family's job."""
     import tempfile
-    import uuid
 
     from crawler_spark.sources import load_table
     from crawler_spark.streaming.stateful import (
         streaming_dedup_within_horizon,
     )
 
-    name = f"dedup_horizon_e2e_{uuid.uuid4().hex[:8]}"
+    name = _sink_name("dedup_horizon_e2e")
     schema = load_table(spark, sf_dir, "documents").select("doc_id", "text").schema
     with stream_conf(spark):
         stream = (
@@ -281,7 +290,6 @@ def streaming_trending_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     the documents table — window assignment, stopword drop, per-doc
     token dedup, and the closed-window top-k all drive the hash."""
     import tempfile
-    import uuid
 
     from crawler_spark.sources import load_table
     from crawler_spark.streaming.event_stream import (
@@ -289,7 +297,7 @@ def streaming_trending_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         trending_token_counts,
     )
 
-    name = f"trending_e2e_{uuid.uuid4().hex[:8]}"
+    name = _sink_name("trending_e2e")
     schema = load_table(spark, sf_dir, "documents").select("doc_id", "text").schema
     stream = (
         spark.readStream.schema(schema)
@@ -616,14 +624,13 @@ def streaming_sessionize_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessionizer — identical (user_id, session_start, n_events) and
     stream end = batch last-event + gap — is pinned in
     tests/test_streaming.py."""
-    import uuid
 
     from crawler_spark.streaming.event_stream import (
         read_event_stream,
         session_windows,
     )
 
-    name = f"sessionize_e2e_{uuid.uuid4().hex[:8]}"
+    name = _sink_name("sessionize_e2e")
     stream = read_event_stream(spark, _event_replay_dir(spark, sf_dir))
     # session-state shards sized to the stream
     with stream_conf(spark):

@@ -35,6 +35,15 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 LOOP_ROWS_PER_PARTITION = 50_000
 
 
+def data_partitions(n_rows: int, rows_per_partition: int) -> int:
+    """Partition count for ``n_rows`` rows at ``rows_per_partition``
+    each: sized from the data alone, never from the core count, so a
+    plan that carries the count is the same on every box."""
+    import math
+
+    return max(1, math.ceil(n_rows / rows_per_partition))
+
+
 def loop_shuffle_partitions(
     spark: SparkSession,
     n_rows: int,
@@ -48,10 +57,8 @@ def loop_shuffle_partitions(
     12), a 10^9-edge graph gets the session default back. Never above
     the ambient ``spark.sql.shuffle.partitions``: a caller that sized
     the session for its cluster keeps that ceiling."""
-    import math
-
     default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(1, min(default, math.ceil(max(n_rows, 1) / rows_per_partition)))
+    return min(default, data_partitions(n_rows, rows_per_partition))
 
 
 # id(session) -> (owning thread id, nesting depth), while a scope is open
@@ -182,6 +189,10 @@ def set_read_confs(spark: SparkSession) -> None:
         spark.conf.set(k, v)
 
 
+# generated classes the driver JVM keeps compiled (see get_spark)
+CODEGEN_CACHE_ENTRIES = 2000
+
+
 def get_spark(
     app_name: str = "crawler_spark",
     cpus: int | None = None,
@@ -213,9 +224,46 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Spark's generated-class cache (static, default 100 entries) is
+        # an LRU; one perfbench query pass generates ~113 distinct
+        # classes, so at 100 every warm pass recompiled all of them
+        # (~9.5 ms of Janino each). 2000 holds a pass many times over
+        # (measured: 0 compiles on a warm pass); SCALING.md has the
+        # Metaspace cost.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compile_count(spark: SparkSession) -> int:
+    """Classes whole-stage/expression codegen has compiled in this JVM
+    so far (Spark's ``CodegenMetrics`` compile-time histogram count)."""
+    jvm = spark.sparkContext._jvm
+    return int(jvm.org.apache.spark.metrics.source.CodegenMetrics
+               .METRIC_COMPILATION_TIME().getCount())
+
+
+@contextlib.contextmanager
+def count_py4j_calls(spark: SparkSession):
+    """Count the Py4J commands the Python side sends to the JVM inside
+    the block: yields a one-element list whose item is the running
+    count. Every ``F.*`` builder, ``DataFrame`` method and JVM field
+    read is at least one such round-trip; plan construction cost on the
+    driver is mostly their number."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    n = [0]
+
+    def counting(*args, **kwargs):
+        n[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield n
+    finally:
+        del client.send_command

@@ -12,6 +12,12 @@ from __future__ import annotations
 
 from typing import Protocol
 
+# the most tasks one fetch stage splits into: one url (or robots
+# origin) per task up to this many. A fixed ceiling, not the core
+# count, so the plan is the same on any box; per-host politeness needs
+# the per-url split, or hosts sharing a task would wait on each other.
+FETCH_TASKS_MAX = 64
+
 
 class Fetcher(Protocol):
     def fetch(self, url: str) -> tuple[str | None, bytes | None, str | None]:

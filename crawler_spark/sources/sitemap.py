@@ -206,9 +206,11 @@ def discover_sitemaps_distributed(
             yield pd.DataFrame(rows, columns=["origin", "sitemap_url"]) \
                 if rows else pd.DataFrame({"origin": [], "sitemap_url": []})
 
-    par = spark.sparkContext.defaultParallelism
+    from crawler_spark.sources.fetch import FETCH_TASKS_MAX
+
     df = origins.select(F2.col(origin_col).alias(origin_col)).distinct()
-    return df.repartition(par, F2.col(origin_col)).mapInPandas(
+    n_parts = max(1, min(df.count(), FETCH_TASKS_MAX))
+    return df.repartition(n_parts, F2.col(origin_col)).mapInPandas(
         sweep, "origin string, sitemap_url string")
 
 

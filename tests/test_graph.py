@@ -546,7 +546,7 @@ def test_driver_solve_bit_identical_on_cooccurrence_graph(spark, use_path):
     from crawler_spark.plans.queries_graph import _event_cooccurrence_edges
     from crawler_spark.sources import load_table
 
-    und = _event_cooccurrence_edges(spark, sf)
+    und = _event_cooccurrence_edges(load_table(spark, sf, "events"))
     edges = und.unionByName(
         und.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint()

@@ -109,3 +109,26 @@ def test_changed_or_new_plans_are_queued_for_driver_verification(spark):
         "queued queries whose plan changed after the snapshot was "
         f"taken (re-run --snapshot-queue): {stale}"
     )
+
+
+def test_memory_sink_suffix_canonicalizes_when_the_uuid_is_all_digits(
+        spark, monkeypatch):
+    """The streaming e2e queries name their memory sink after a random
+    uuid. An all-decimal 8-hex draw (about 2.3% of them) used to stay
+    in the canonical plan, which ``_hex_repl`` keeps for numeric
+    aliases; the suffix now always carries a letter, so a forced
+    all-digit uuid gives the same canonical plan as a lettered one."""
+    import uuid
+
+    from conftest import SF_SMALL
+
+    from crawler_spark.plans import registry
+    from tools.plan_ledger import canonical_plan
+
+    registry.load_all()
+    build = registry.QUERIES["streaming_trending_e2e"]
+    plans = []
+    for hex_ in ("12345678" * 4, "a2345678" * 4):
+        monkeypatch.setattr(uuid, "uuid4", lambda h=hex_: uuid.UUID(h))
+        plans.append(canonical_plan(build(spark, SF_SMALL)))
+    assert plans[0] == plans[1]
