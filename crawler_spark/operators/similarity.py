@@ -639,8 +639,8 @@ def knn_topk_filtered(
 
 
 # cosine_pairs_exact's default blocking: estimated input bytes per
-# block, and a ceiling for inputs without a size estimate (a
-# checkpointed frame reports spark.sql.defaultSizeInBytes)
+# block, and a ceiling on the block count (B blocks are B(B+1)/2
+# block-pair tasks)
 COSINE_BLOCK_BYTES = 1 << 20
 COSINE_MAX_BLOCKS = 64
 
@@ -684,11 +684,10 @@ def cosine_pairs_exact(
 
     thr = float(threshold)
     if num_blocks is None:
-        from crawler_spark.session import data_partitions
+        from crawler_spark.session import estimated_partitions
 
-        est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         num_blocks = min(COSINE_MAX_BLOCKS,
-                         max(2, data_partitions(int(est), COSINE_BLOCK_BYTES)))
+                         max(2, estimated_partitions(df, COSINE_BLOCK_BYTES)))
     B = num_blocks
 
     norm = df.select(

@@ -23,8 +23,29 @@ from pyspark.sql import functions as F
 
 from crawler_spark import schemas
 from crawler_spark.functions.embedding import StubEmbedder
-from crawler_spark.sources.fetch import FETCH_TASKS_MAX, Fetcher
+from crawler_spark.sources.fetch import Fetcher, core_split_frame
 from crawler_spark.sources.file_handlers import classify_content_type, extract_pdf_text
+
+
+def _host(url: str) -> str:
+    """ONE host key for politeness grouping and delay tracking alike:
+    lowercased hostname, no port/userinfo, so same-host url variants
+    share a task and a delay; malformed urls ("http://[") key under ""
+    — they dead-letter at fetch instead of crashing the stage."""
+    from urllib.parse import urlsplit
+
+    try:
+        return (urlsplit(url).hostname or "").lower()
+    except ValueError:
+        return ""
+
+
+def _by_host(urls: list[str]) -> list[list[str]]:
+    """``urls`` grouped by ``_host``, in first-seen order."""
+    groups: dict[str, list[str]] = {}
+    for u in urls:
+        groups.setdefault(_host(u), []).append(u)
+    return list(groups.values())
 
 
 def fetch_frontier(
@@ -38,40 +59,26 @@ def fetch_frontier(
     The fetcher is pickled into the closure (stub: in-memory dict;
     http: config only) — each partition fetches its slice, so crawl
     concurrency is partition parallelism, the Spark analogue of the
-    reference's CONCURRENT_REQUESTS (crawlers/README.md:298-321): one
-    url per task, up to ``FETCH_TASKS_MAX`` tasks.
+    reference's CONCURRENT_REQUESTS (crawlers/README.md:298-321): the
+    frontier splits into one slice per core (``core_split_frame``).
 
     ``per_host_delay`` > 0 is the DOWNLOAD_DELAY politeness analogue
-    (crawlers/README.md:298-321): urls are partitioned by HOST HASH so
-    one host's urls land in one partition (no cross-partition races on
-    the same origin), and consecutive fetches to the same host inside
-    the partition wait out the delay. Different hosts sharing a
-    partition do not gate each other. Default 0 keeps the round-robin
-    spread (maximum parallelism, the existing behavior).
+    (crawlers/README.md:298-321): one host's urls travel as ONE row, so
+    they land in one partition (no cross-partition races on the same
+    origin), and consecutive fetches to the same host inside the
+    partition wait out the delay. Default 0 splits url by url (maximum
+    parallelism, the existing behavior).
     """
     import time as _time
-    from urllib.parse import urlsplit
 
-    frontier = spark.createDataFrame([(u,) for u in urls], "url string")
-
-    def _host(url: str) -> str:
-        # ONE host key for partitioning and delay tracking alike:
-        # lowercased hostname, no port/userinfo (matching the
-        # lower(parse_url HOST) partition key below). The former
-        # netloc key disagreed with the partition key on case and
-        # userinfo, so same-host url variants skipped the delay
-        # (review-found); malformed urls ("http://[") key under "" —
-        # they dead-letter at fetch instead of crashing the stage.
-        try:
-            return (urlsplit(url).hostname or "").lower()
-        except ValueError:
-            return ""
+    groups = _by_host(urls) if per_host_delay > 0 else [[u] for u in urls]
+    frontier = core_split_frame(spark, [(g,) for g in groups], "urls array<string>")
 
     def do_fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         last_hit: dict[str, float] = {}
         for pdf in batches:
             rows = []
-            for url in pdf["url"]:
+            for url in (u for g in pdf["urls"] for u in g):
                 if per_host_delay > 0:
                     host = _host(url)
                     wait = last_hit.get(host, -1e18) + per_host_delay - _time.monotonic()
@@ -84,14 +91,7 @@ def fetch_frontier(
                 )
             yield pd.DataFrame(rows, columns=["url", "content_type", "body", "fetch_error"])
 
-    n_parts = max(1, min(len(urls), FETCH_TASKS_MAX))
-    if per_host_delay > 0:
-        part = frontier.repartition(
-            n_parts, F.lower(F.parse_url("url", F.lit("HOST")))
-        )
-    else:
-        part = frontier.repartition(n_parts)
-    return part.mapInPandas(do_fetch, schema=schemas.FETCHED)
+    return frontier.mapInPandas(do_fetch, schema=schemas.FETCHED)
 
 
 def robots_allowed_map(
@@ -136,27 +136,25 @@ def robots_filter(
     spark: SparkSession, fetcher: Fetcher, urls: list[str], user_agent: str = "*"
 ) -> DataFrame:
     """P8 at scale: (url, allowed) computed ON THE EXECUTORS. Urls
-    repartition by host so each partition resolves each origin's
-    robots.txt once (memoized per batch). The r1 implementation fetched
+    travel grouped by host, one row per host split one slice per core
+    (``core_split_frame``), so each partition resolves each origin's
+    robots.txt once (memoized per partition). The r1 implementation fetched
     robots serially on the driver — O(#domains) HTTP round-trips
     through one machine, a real bottleneck on a 100k-url wave over many
     domains. (For small waves the crawl loop calls robots_allowed_map
     directly — a Spark stage per wave isn't worth it under ~1k urls.)"""
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    df = core_split_frame(spark, [(g,) for g in _by_host(urls)], "urls array<string>")
 
     def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cache: dict = {}  # per-partition: origins survive across batches
         for pdf in batches:
-            allowed = robots_allowed_map(fetcher, pdf["url"], user_agent, cache)
+            batch = [u for g in pdf["urls"] for u in g]
+            allowed = robots_allowed_map(fetcher, batch, user_agent, cache)
             yield pd.DataFrame(
-                {"url": pdf["url"], "allowed": [allowed[u] for u in pdf["url"]]}
+                {"url": batch, "allowed": [allowed[u] for u in batch]}
             )
 
-    return (
-        df.repartition(max(1, min(len(urls), FETCH_TASKS_MAX)),
-                       F.parse_url("url", F.lit("HOST")))
-        .mapInPandas(check, schema="url string, allowed boolean")
-    )
+    return df.mapInPandas(check, schema="url string, allowed boolean")
 
 
 def parse_stage(fetched: DataFrame) -> DataFrame:

@@ -775,7 +775,7 @@ def sink_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def crawl_sitemap_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The at-scale robots.txt ``Sitemap:`` discovery sweep
     (sources/sitemap.py discover_sitemaps_distributed): origins
-    repartitioned by host, robots fetched ON THE EXECUTORS via a
+    split one slice per core, robots fetched ON THE EXECUTORS via a
     per-task fetcher factory, one (origin, sitemap_url) row per
     directive. The fixture derives one origin per (source, doc_id%50)
     from the documents table and serves three deterministic robots

@@ -44,6 +44,21 @@ def data_partitions(n_rows: int, rows_per_partition: int) -> int:
     return max(1, math.ceil(n_rows / rows_per_partition))
 
 
+def estimated_partitions(df, bytes_per_partition: int) -> int:
+    """Partition count for ``df`` at ``bytes_per_partition`` each of
+    Catalyst's size estimate, its optimized plan's ``sizeInBytes``:
+    worked out from file sizes and column widths, so no Spark job runs.
+    A frame Spark cannot size (a checkpoint, an RDD) reports
+    ``spark.sql.defaultSizeInBytes`` and gets the session's
+    ``spark.sql.shuffle.partitions``, the width Spark gives any shuffle
+    it cannot size."""
+    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    if est >= conf.defaultSizeInBytes():
+        return conf.numShufflePartitions()
+    return data_partitions(est, bytes_per_partition)
+
+
 def loop_shuffle_partitions(
     spark: SparkSession,
     n_rows: int,
@@ -255,6 +270,9 @@ def count_py4j_calls(spark: SparkSession):
     read is at least one such round-trip; plan construction cost on the
     driver is mostly their number."""
     client = spark.sparkContext._gateway._gateway_client
+    # an enclosing block's counter lives in the instance dict; restore
+    # it on exit instead of deleting it
+    outer = vars(client).get("send_command")
     send = client.send_command
     n = [0]
 
@@ -266,4 +284,7 @@ def count_py4j_calls(spark: SparkSession):
     try:
         yield n
     finally:
-        del client.send_command
+        if outer is None:
+            del client.send_command
+        else:
+            client.send_command = outer

@@ -12,11 +12,17 @@ from __future__ import annotations
 
 from typing import Protocol
 
-# the most tasks one fetch stage splits into: one url (or robots
-# origin) per task up to this many. A fixed ceiling, not the core
-# count, so the plan is the same on any box; per-host politeness needs
-# the per-url split, or hosts sharing a task would wait on each other.
-FETCH_TASKS_MAX = 64
+
+def core_split_frame(spark, rows: list, schema: str):
+    """``rows`` as a DataFrame in min(len(rows), defaultParallelism)
+    partitions, for the stages whose tasks wait on the network (fetch,
+    robots, sitemap discovery): as many of them run at once as the
+    cluster has cores. The count lives in the parallelized RDD, which
+    the analyzed plan shows as a count-free ``LogicalRDD``, so the plan
+    is the same on every core count."""
+    sc = spark.sparkContext
+    n = max(1, min(len(rows), sc.defaultParallelism))
+    return spark.createDataFrame(sc.parallelize(rows, n), schema)
 
 
 class Fetcher(Protocol):

@@ -166,8 +166,9 @@ def discover_sitemaps_distributed(
 ) -> DataFrame:
     """The at-scale form of ``discover_sitemaps``: one (origin,
     sitemap_url) row per directive, robots fetched ON THE EXECUTORS
-    with origins repartitioned by host so each partition fetches each
-    origin's robots.txt once — the exact shape of
+    with the distinct origins collected to the driver (one job, as the
+    crawl collects each wave's urls) and split one slice per core, so
+    each origin's robots.txt is fetched once — the shape of
     ``plans/ingest.robots_filter``. Origins without a fetchable
     robots.txt or without directives simply contribute no rows (route
     fetch errors through the crawl's dead-letter tier if they must be
@@ -206,12 +207,13 @@ def discover_sitemaps_distributed(
             yield pd.DataFrame(rows, columns=["origin", "sitemap_url"]) \
                 if rows else pd.DataFrame({"origin": [], "sitemap_url": []})
 
-    from crawler_spark.sources.fetch import FETCH_TASKS_MAX
+    from crawler_spark.sources.fetch import core_split_frame
 
-    df = origins.select(F2.col(origin_col).alias(origin_col)).distinct()
-    n_parts = max(1, min(df.count(), FETCH_TASKS_MAX))
-    return df.repartition(n_parts, F2.col(origin_col)).mapInPandas(
-        sweep, "origin string, sitemap_url string")
+    # the work list, like a crawl wave's urls: collected once, then
+    # split one slice per core
+    work = origins.select(F2.col(origin_col).alias(origin_col)).distinct().collect()
+    df = core_split_frame(spark, [tuple(r) for r in work], f"`{origin_col}` string")
+    return df.mapInPandas(sweep, "origin string, sitemap_url string")
 
 
 def fetch_sitemap_blobs(

@@ -65,17 +65,23 @@ def _fingerprint(path: str) -> tuple | None:
 
 
 @functools.lru_cache(maxsize=SCHEMA_CACHE_ENTRIES)
-def _schema(spark: SparkSession, path: str, fingerprint: tuple):
-    """The inferred schema of the table at ``path`` as ``fingerprint``
-    describes it — one footer-merge job per key."""
-    return spark.read.parquet(path).schema
+def _schema_slot(session_id: str, path: str, fingerprint: tuple) -> list:
+    """The one-item holder of the schema inferred for ``path`` as
+    ``fingerprint`` describes it, in the session ``session_id`` names
+    (its read confs shape the inferred types). The key holds the
+    session's id, not the session, so the cache keeps no stopped
+    session alive; the first reader fills the holder."""
+    return []
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     fp = _fingerprint(path)
     if fp is None:
         return spark.read.parquet(path)
-    return spark.read.schema(_schema(spark, path, fp)).parquet(path)
+    slot = _schema_slot(spark._jsparkSession.sessionUUID(), path, fp)
+    if not slot:
+        slot.append(spark.read.parquet(path).schema)
+    return spark.read.schema(slot[0]).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

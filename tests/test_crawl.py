@@ -161,6 +161,25 @@ class TestCrawl:
 
 
 class TestPoliteness:
+    def test_fetch_stage_runs_one_slice_per_core(self, spark):
+        """The fetch stage runs min(work items, cores) tasks; with a
+        per-host delay each host's urls share one task."""
+        from pyspark.sql import functions as F
+
+        from crawler_spark.plans.ingest import fetch_frontier
+
+        urls = [f"https://h{i % 3}.test/p{i}" for i in range(12)]
+        cores = spark.sparkContext.defaultParallelism
+        df = fetch_frontier(spark, StubFetcher({}), urls)
+        assert df.rdd.getNumPartitions() == min(12, cores)
+        polite = fetch_frontier(spark, StubFetcher({}), urls, per_host_delay=1e-3)
+        assert polite.rdd.getNumPartitions() == min(3, cores)
+        parts = polite.select("url", F.spark_partition_id().alias("p")).collect()
+        by_host: dict[str, set[int]] = {}
+        for r in parts:
+            by_host.setdefault(r.url.split("/")[2], set()).add(r.p)
+        assert len(by_host) == 3 and all(len(p) == 1 for p in by_host.values())
+
     def test_per_host_delay_spaces_same_host_fetches(self, spark):
         """per_host_delay: consecutive fetches against ONE host must be
         spaced by >= the delay (host-hash partitioning makes same-host

@@ -47,6 +47,46 @@ def test_minhash_signatures_builds_in_bounded_py4j_calls(spark):
     assert n <= 600, n
 
 
+def test_py4j_call_counters_nest(spark):
+    """An inner counter adds to the outer one and hands the client back
+    to it on exit; the outermost exit leaves the client as it was."""
+    client = spark.sparkContext._gateway._gateway_client
+    with count_py4j_calls(spark) as outer:
+        spark.range(1).columns
+        with count_py4j_calls(spark) as inner:
+            spark.range(1).columns
+        mid = outer[0]
+        spark.range(1).columns
+    assert 0 < inner[0] < mid < outer[0]
+    assert "send_command" not in vars(client)
+
+
+def _build_jobs(spark, build) -> int:
+    """Spark jobs a warm ``build()`` starts while it constructs its
+    plan (a first call fills the table schema cache)."""
+    build()
+    sc = spark.sparkContext
+    group = f"build_{id(build)}"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_partition_counts_are_sized_without_jobs(spark):
+    """The fuzzy probe's and the cosine blocks' counts come from the
+    plan's size estimate: no query runs its input while its plan is
+    built."""
+    from crawler_spark.plans import registry
+
+    registry.load_all()
+    for q in ("dedup_fuzzy_levenshtein", "dedup_fuzzy_seeded",
+              "simsearch_cosine_pairs"):
+        assert _build_jobs(spark, lambda: registry.QUERIES[q](spark, SF)) == 0, q
+
+
 def _query_pass(spark) -> None:
     """perfbench's query mix over the sf0.001 testdata: one request of
     each search kind, collected, and the three registered batch
