@@ -156,6 +156,15 @@ _NEVER_DRIVER_VERIFIED = [
     "dedup_fuzzy_seeded",
     "ingest_dead_letter",
     "simsearch_cosine_pairs",
+    # --- (c) scratch directories come from session.scratch_dir (one
+    # per-process root, removed at exit) instead of per-module path
+    # caches, bare mkdtemp and a shared /tmp ANN index cache. No
+    # analyzed plan moved, but the sink-source fingerprint did for the
+    # seven streaming_*_e2e names that make their own directories and
+    # for dedup_semantic_incremental. semantic_dedup_pairs now calls
+    # top_centroids_udf, so dedup_semantic's list-assignment UDF is
+    # named _top instead of _top_lists; the driver union-find's local
+    # relation hides that from its hash. All nine are already queued.
 ]
 
 

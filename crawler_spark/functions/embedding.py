@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
+from crawler_spark.functions.model_server import post_json
+
 DEFAULT_DIMS = 64  # testdata embedding dimensionality; reference uses 1024
 
 
@@ -154,19 +156,8 @@ class OllamaEmbedder:
         self.transport = transport
 
     def _post(self, path: str, payload: dict) -> dict:
-        url = self.base_url + path
-        if self.transport is not None:
-            return self.transport(url, payload)
-        import json
-        import urllib.request
-
-        req = urllib.request.Request(
-            url,
-            data=json.dumps(payload).encode("utf-8"),
-            headers={"Content-Type": "application/json"},
-        )
-        with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-            return json.loads(resp.read().decode("utf-8"))
+        return post_json(self.base_url + path, payload, self.timeout,
+                         self.transport)
 
     def embed_text(self, text: str) -> list[float]:
         out = self._post(

@@ -24,6 +24,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from crawler_spark.functions.model_server import ChatJSONClient
+
 ECOMMERCE_SCHEMA = T.StructType(
     [
         T.StructField("product_name", T.StringType()),
@@ -94,59 +96,17 @@ class StubExtractor:
         return json.dumps(out)
 
 
-class OllamaExtractor:
+class OllamaExtractor(ChatJSONClient):
     """HTTP implementation of the Extractor interface — the reference's
     real path (backend/src/structured_data.py:57-109): POST /api/chat
     with ``format:'json'`` and the F10 prompt; ANY failure (transport,
     non-JSON reply, non-dict JSON) degrades to ``'{}'`` exactly like
-    the reference. Timeout default mirrors structured_data.py:81
-    (3600 s). ``transport`` is an injectable ``(url, payload) -> dict``
-    for hermetic tests; default urllib."""
-
-    def __init__(
-        self,
-        base_url: str = "http://localhost:11434",
-        model: str = "llama3.2:latest",
-        timeout_sec: float = 3600.0,
-        transport=None,
-    ):
-        self.base_url = base_url.rstrip("/")
-        self.model = model
-        self.timeout = timeout_sec
-        self.transport = transport
-
-    def _post(self, path: str, payload: dict) -> dict:
-        url = self.base_url + path
-        if self.transport is not None:
-            return self.transport(url, payload)
-        import urllib.request
-
-        req = urllib.request.Request(
-            url,
-            data=json.dumps(payload).encode("utf-8"),
-            headers={"Content-Type": "application/json"},
-        )
-        with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-            return json.loads(resp.read().decode("utf-8"))
+    the reference (functions/model_server.py ChatJSONClient)."""
 
     def extract(self, schema_name: str, content: str | None) -> str:
-        if content is None:
+        if content is None or schema_name not in EXTRACTION_SCHEMAS:
             return "{}"
-        try:
-            prompt = extraction_prompt(schema_name, content)
-            out = self._post(
-                "/api/chat",
-                {
-                    "model": self.model,
-                    "messages": [{"role": "user", "content": prompt}],
-                    "format": "json",
-                    "stream": False,
-                },
-            )
-            parsed = json.loads(out["message"]["content"])
-            return json.dumps(parsed) if isinstance(parsed, dict) else "{}"
-        except Exception:
-            return "{}"
+        return self._chat_json(extraction_prompt(schema_name, content))
 
 
 def extract_udf(schema_name: str, extractor: StubExtractor | None = None):

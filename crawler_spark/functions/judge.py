@@ -27,6 +27,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from crawler_spark.functions.model_server import ChatJSONClient
+
 JUDGE_SCHEMA = T.StructType([
     T.StructField("score", T.IntegerType()),
     T.StructField("verdict", T.StringType()),
@@ -61,59 +63,15 @@ class StubJudge:
         return json.dumps({"score": score, "verdict": verdict})
 
 
-class OllamaJudge:
+class OllamaJudge(ChatJSONClient):
     """HTTP judge against an Ollama-compatible /api/chat endpoint —
     the same call shape and degradation contract as OllamaExtractor
-    (functions/extraction.py). ``transport`` is an injectable
-    ``(url, payload) -> dict`` for hermetic tests."""
-
-    def __init__(
-        self,
-        base_url: str = "http://localhost:11434",
-        model: str = "llama3.2:latest",
-        timeout_sec: float = 3600.0,
-        transport=None,
-    ):
-        self.base_url = base_url.rstrip("/")
-        self.model = model
-        self.timeout = timeout_sec
-        self.transport = transport
-
-    def _post(self, path: str, payload: dict) -> dict:
-        url = self.base_url + path
-        if self.transport is not None:
-            return self.transport(url, payload)
-        import urllib.request
-
-        req = urllib.request.Request(
-            url,
-            data=json.dumps(payload).encode("utf-8"),
-            headers={"Content-Type": "application/json"},
-        )
-        import urllib.request as _ur
-
-        with _ur.urlopen(req, timeout=self.timeout) as resp:
-            return json.loads(resp.read().decode("utf-8"))
+    (functions/model_server.py ChatJSONClient)."""
 
     def judge(self, content: str | None) -> str:
         if content is None:
             return "{}"
-        try:
-            out = self._post(
-                "/api/chat",
-                {
-                    "model": self.model,
-                    "messages": [
-                        {"role": "user", "content": judge_prompt(content)}
-                    ],
-                    "format": "json",
-                    "stream": False,
-                },
-            )
-            parsed = json.loads(out["message"]["content"])
-            return json.dumps(parsed) if isinstance(parsed, dict) else "{}"
-        except Exception:
-            return "{}"
+        return self._chat_json(judge_prompt(content))
 
 
 def judge_udf(judge: StubJudge | OllamaJudge | None = None):

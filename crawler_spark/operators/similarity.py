@@ -827,18 +827,10 @@ def semantic_dedup_pairs(
 
     from crawler_spark.operators.dedup import long_id
 
-    cmat = np.asarray(centroids, dtype=np.float64)
-    n_top = max(1, min(int(n_assign), len(cmat)))
-
-    @F.pandas_udf("array<int>")
-    def _top_lists(vs: pd.Series) -> pd.Series:
-        mat = np.stack(vs).astype(np.float64, copy=False)
-        order = np.argsort(-(mat @ cmat.T), axis=1)[:, :n_top].astype(np.int32)
-        return pd.Series(list(order))
-
+    top_lists = top_centroids_udf(centroids, n_assign)
     norm = df.select(
         long_id(df, id_col).alias("id"), V.l2_normalize(vec_col).alias("v")
-    ).select("id", "v", F.explode(_top_lists("v")).alias("list_id"))
+    ).select("id", "v", F.explode(top_lists("v")).alias("list_id"))
 
     def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         mat = np.stack(pdf["v"]).astype(np.float64, copy=False)

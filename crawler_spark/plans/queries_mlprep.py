@@ -1336,11 +1336,6 @@ def curation_distilled_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # replay source, landed table and stream checkpoint live together so a
 # re-run resumes the same stream (no new files -> no batches) and the
 # idempotent doc_id merge keeps the landed table converged
-_DISTILL_STREAM_SRC: dict[str, str] = {}
-_DISTILL_STREAM_TBLS: dict[str, str] = {}
-_DISTILL_STREAM_CKPTS: dict[str, str] = {}
-
-
 @register("streaming_distilled_filter_e2e", oracle=f"""
         SELECT doc_id, n_feats, score_micro
         FROM ({_qc_score_sql("TRUE")})
@@ -1372,8 +1367,7 @@ def streaming_distilled_filter_e2e(spark: SparkSession, sf_dir: str) -> DataFram
     corpus-scale state, no cross-batch shuffle; watermark-free because
     scoring is stateless per document."""
     from crawler_spark.operators.upsert import key_bucket, merge_into_bucketed
-    from crawler_spark.plans.queries_sources import _memo_tmpdir
-    from crawler_spark.session import stream_conf
+    from crawler_spark.session import scratch_dir, stream_conf
     from crawler_spark.streaming.ingest_stream import read_pages_table
 
     def build_src(path: str) -> None:
@@ -1381,10 +1375,9 @@ def streaming_distilled_filter_e2e(spark: SparkSession, sf_dir: str) -> DataFram
          .select("doc_id", "text").repartition(6)
          .write.mode("overwrite").parquet(path))
 
-    src = _memo_tmpdir(_DISTILL_STREAM_SRC, sf_dir, "distill_stream_src_",
-                       populate=build_src)
-    tbl = _memo_tmpdir(_DISTILL_STREAM_TBLS, sf_dir, "distill_stream_tbl_")
-    ckpt = _memo_tmpdir(_DISTILL_STREAM_CKPTS, sf_dir, "distill_stream_ckpt_")
+    src = scratch_dir("distill_stream_src_", key=sf_dir, populate=build_src)
+    tbl = scratch_dir("distill_stream_tbl_", key=sf_dir)
+    ckpt = scratch_dir("distill_stream_ckpt_", key=sf_dir)
     model = _qc_model_df(spark, sf_dir)  # eager: trains on first call
 
     def sink(batch: DataFrame, _id: int) -> None:

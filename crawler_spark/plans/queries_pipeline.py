@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from crawler_spark.plans.oracle_pins import pin_kwargs as _PINS_KW
 from crawler_spark.plans.registry import register
-from crawler_spark.session import scoped_conf, stream_conf
+from crawler_spark.session import scoped_conf, scratch_dir, stream_conf
 from crawler_spark.sources.fetch import StubFetcher
 from crawler_spark.sources.file_handlers import STUB_PDF_MAGIC
 
@@ -125,8 +125,6 @@ def streaming_neardup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the distributed plumbing (Arrow simhash kernel on a stream,
     band explode, applyInPandasWithState sharding, verdict reduce)
     end-to-end on real data."""
-    import tempfile
-
     from crawler_spark.sources import load_table
     from crawler_spark.streaming.neardup_stream import (
         reduce_verdicts,
@@ -149,8 +147,7 @@ def streaming_neardup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             streaming_neardup_verdicts(stream)
             .writeStream.format("memory").queryName(name)
             .outputMode("append")
-            .option("checkpointLocation",
-                    tempfile.mkdtemp(prefix="neardup_ckpt_"))
+            .option("checkpointLocation", scratch_dir("neardup_ckpt_"))
             .start()
         )
         try:
@@ -196,8 +193,6 @@ def streaming_dedup_horizon_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dropDuplicatesWithinWatermark`` keeps the first ARRIVAL, which
     is plan/partition-order dependent within a micro-batch; which-copy
     -wins discipline is the batch keep-best family's job."""
-    import tempfile
-
     from crawler_spark.sources import load_table
     from crawler_spark.streaming.stateful import (
         streaming_dedup_within_horizon,
@@ -221,8 +216,7 @@ def streaming_dedup_horizon_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             streaming_dedup_within_horizon(stream, horizon_sec=365 * 86400)
             .writeStream.format("memory").queryName(name)
             .outputMode("append")
-            .option("checkpointLocation",
-                    tempfile.mkdtemp(prefix="dedup_horizon_ckpt_"))
+            .option("checkpointLocation", scratch_dir("dedup_horizon_ckpt_"))
             .start()
         )
         try:
@@ -289,8 +283,6 @@ def streaming_trending_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sliding-window counts and the per-window rank straight from
     the documents table — window assignment, stopword drop, per-doc
     token dedup, and the closed-window top-k all drive the hash."""
-    import tempfile
-
     from crawler_spark.sources import load_table
     from crawler_spark.streaming.event_stream import (
         top_tokens_per_window,
@@ -316,7 +308,7 @@ def streaming_trending_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         counts.writeStream.format("memory").queryName(name)
         .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="trend_ckpt_"))
+        .option("checkpointLocation", scratch_dir("trend_ckpt_"))
         .start()
     )
     try:
@@ -509,9 +501,6 @@ def streaming_index_append_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal to a batch build of the same rows (lockstep-tested in
     tests/test_streaming.py); the probe here returning the exact-path
     neighbors proves it on real data."""
-    import tempfile
-    import uuid
-
     from crawler_spark.operators.similarity import (
         append_banded_index,
         knn_topk_precomputed,
@@ -520,9 +509,9 @@ def streaming_index_append_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawler_spark.sources import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    src = tempfile.mkdtemp(prefix=f"idx_stream_src_{uuid.uuid4().hex[:6]}_")
+    src = scratch_dir("idx_stream_src_")
     emb.repartition(2).write.mode("overwrite").parquet(src)
-    idx = tempfile.mkdtemp(prefix="idx_stream_out_") + "/banded"
+    idx = scratch_dir("idx_stream_out_") + "/banded"
 
     # two micro-batches exercise the incremental path; per-batch append
     # jobs are tiny, so size the shuffle to the stream
@@ -536,7 +525,7 @@ def streaming_index_append_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream.writeStream.foreachBatch(
                 lambda batch, _id: append_banded_index(batch, idx)
             )
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="idx_ckpt_"))
+            .option("checkpointLocation", scratch_dir("idx_ckpt_"))
             .start()
         )
         try:
@@ -553,20 +542,10 @@ def streaming_index_append_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # TIMESTAMP_NTZ micros in others (the sf0.001/0.01/0.1 sets), so the
 # stream replays a load_table-normalized multi-file copy (4 files → 4 micro-batches,
 # real cross-batch session-state merging).
-_EVENT_REPLAY_DIRS: dict[str, str] = {}
-
-
 def _event_replay_dir(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
+    from crawler_spark.sources import load_table
 
-    path = _EVENT_REPLAY_DIRS.get(sf_dir)
-    if path is None:
-        from crawler_spark.sources import load_table
-
-        path = tempfile.mkdtemp(prefix="ev_replay_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    def build(path: str) -> None:
         (
             load_table(spark, sf_dir, "events")
             .select("event_id", "ts", "user_id", "event_type",
@@ -575,8 +554,8 @@ def _event_replay_dir(spark: SparkSession, sf_dir: str) -> str:
             .repartition(4)
             .write.mode("overwrite").parquet(path)
         )
-        _EVENT_REPLAY_DIRS[sf_dir] = path
-    return path
+
+    return scratch_dir("ev_replay_", key=sf_dir, populate=build)
 
 
 @register(
@@ -655,14 +634,7 @@ def streaming_sessionize_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- incremental semantic dedup at ingest (round 12) -----------------------
 # Stream-source replay dir, corpus-index dir, landed verdict table and
-# checkpoint — one memoized tmpdir each per (process, sf_dir), the
-# _memo_tmpdir shape every streaming e2e query here shares.
-_SEMDEDUP_STREAM_SRC: dict[str, str] = {}
-_SEMDEDUP_CORPUS_IDX: dict[str, str] = {}
-_SEMDEDUP_STREAM_TBLS: dict[str, str] = {}
-_SEMDEDUP_STREAM_CKPTS: dict[str, str] = {}
-
-
+# checkpoint — one memoized scratch_dir each per (process, sf_dir).
 @register(
     "streaming_semantic_dedup_e2e",
     # seeded centroids have no SQL closed form — REGRESSION pin at the
@@ -704,7 +676,6 @@ def streaming_semantic_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         top_centroids_udf,
     )
     from crawler_spark.operators.upsert import key_bucket, merge_into_bucketed
-    from crawler_spark.plans.queries_sources import _memo_tmpdir
     from crawler_spark.plans.queries_vector import _ensure_ivf_centroids
     from crawler_spark.sources import load_table
     from crawler_spark.streaming.ingest_stream import read_pages_table
@@ -722,13 +693,10 @@ def streaming_semantic_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build_idx(path: str) -> None:
         build_ivf_index(emb.filter(~is_arriving), path, centroids)
 
-    src = _memo_tmpdir(_SEMDEDUP_STREAM_SRC, sf_dir,
-                       "semdedup_stream_src_", populate=build_src)
-    idx = _memo_tmpdir(_SEMDEDUP_CORPUS_IDX, sf_dir,
-                       "semdedup_corpus_idx_", populate=build_idx)
-    tbl = _memo_tmpdir(_SEMDEDUP_STREAM_TBLS, sf_dir, "semdedup_stream_tbl_")
-    ckpt = _memo_tmpdir(_SEMDEDUP_STREAM_CKPTS, sf_dir,
-                        "semdedup_stream_ckpt_")
+    src = scratch_dir("semdedup_stream_src_", key=sf_dir, populate=build_src)
+    idx = scratch_dir("semdedup_corpus_idx_", key=sf_dir, populate=build_idx)
+    tbl = scratch_dir("semdedup_stream_tbl_", key=sf_dir)
+    ckpt = scratch_dir("semdedup_stream_ckpt_", key=sf_dir)
 
     _probe_lists = top_centroids_udf(centroids, NPROBE)
 

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from crawler_spark.operators.skew import salted_join
 from crawler_spark.plans.oracle_pins import pin_kwargs as _PINS_KW
 from crawler_spark.plans.registry import register
+from crawler_spark.session import scratch_dir
 from crawler_spark.sources import load_table
 from crawler_spark.sources.bucketed import bucketed_pair
 
@@ -214,13 +215,12 @@ def layout_zorder_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds both columns tightly, where a single-column sort bounds
     only one."""
     import os
-    import tempfile
 
     from crawler_spark.operators.layout import write_zordered
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", F.unix_timestamp("ts").alias("ts_s"))
-    path = os.path.join(tempfile.mkdtemp(prefix="zorder_"), "events_z")
+    path = os.path.join(scratch_dir("zorder_"), "events_z")
     write_zordered(ev, path, "user_id", "ts_s", n_files=16)
     back = spark.read.parquet(path)
     return (
@@ -305,12 +305,11 @@ def layout_compact_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance job that keeps scan task counts sane after streaming
     appends."""
     import os
-    import tempfile
 
     from crawler_spark.operators.layout import compact_files
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
-    scratch = tempfile.mkdtemp(prefix="compact_")
+    scratch = scratch_dir("compact_")
     frag = os.path.join(scratch, "fragmented")
     ev.repartition(64).write.mode("overwrite").parquet(frag)
     stats = compact_files(
@@ -325,9 +324,7 @@ def _build_versioned_doc_table(spark: SparkSession, sf_dir: str):
     """Shared fixture for the time-travel/CDF queries: a bucketed
     manifest table with three committed states — base load, an upsert
     batch (+1 char on every doc_id % 10 == 0), a delete
-    (doc_id % 7 == 0 removed). Returns (scratch_dir, pages_dir)."""
-    import tempfile
-
+    (doc_id % 7 == 0 removed). Returns (table_root, pages_dir)."""
     from crawler_spark.operators.upsert import merge_by_key
     from crawler_spark.streaming.ingest_stream import (
         apply_bucket_commit,
@@ -338,7 +335,7 @@ def _build_versioned_doc_table(spark: SparkSession, sf_dir: str):
         "doc_id", "source", "n_chars",
         F.pmod(F.xxhash64("source"), F.lit(8)).cast("int").alias("bucket"),
     )
-    tdir = tempfile.mkdtemp(prefix="timetravel_")
+    tdir = scratch_dir("timetravel_")
     pages_dir = f"{tdir}/table"
 
     def commit_state(df, epoch, touched=None):
@@ -508,7 +505,6 @@ def upsert_merge_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a hash-pass proves the pruned path changes the plan and not
     the answer."""
     import shutil
-    import tempfile
 
     from crawler_spark.operators.upsert import (
         delete_from_bucketed,
@@ -520,7 +516,7 @@ def upsert_merge_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "n_chars",
         F.pmod(F.col("doc_id"), F.lit(NUM_BUCKETS)).cast("int").alias("bucket"),
     )
-    tdir = tempfile.mkdtemp(prefix="mergepruned_")
+    tdir = scratch_dir("mergepruned_")
     try:
         table = f"{tdir}/table"
         merge_into_bucketed(spark, table, docs, key="doc_id")  # base load
@@ -816,27 +812,16 @@ def scd2_customer_addresses(spark: SparkSession, sf_dir: str) -> DataFrame:
 # removed at exit — repeated driver/bench invocations reuse it instead
 # of accumulating temp copies (and the measured time stops including
 # the write after the first run).
-_DPP_LAYOUT_CACHE: dict = {}
-
-
 def _dpp_layout_path(spark, sf_dir: str) -> str:
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    path = _DPP_LAYOUT_CACHE.get(sf_dir)
-    if path is None:
-        root = tempfile.mkdtemp(prefix="dpp_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        path = os.path.join(root, "orders_part")
+    def build(path: str) -> None:
         (
             load_table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_totalprice", "o_orderpriority")
-            .write.partitionBy("o_orderpriority").parquet(path)
+            .write.mode("overwrite").partitionBy("o_orderpriority")
+            .parquet(path)
         )
-        _DPP_LAYOUT_CACHE[sf_dir] = path
-    return path
+
+    return scratch_dir("dpp_", key=sf_dir, populate=build)
 
 
 @register(

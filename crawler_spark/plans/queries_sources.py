@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from crawler_spark.functions import text as X
 from crawler_spark.plans.registry import register
+from crawler_spark.session import scratch_dir
 from crawler_spark.sources import load_table
 
 # url synthesized per doc — same convention both engines render
@@ -119,40 +120,6 @@ def source_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The on-disk fixture is built once per (process, sf_dir): files are
 # what the ranged reader reads, and rebuilding identical bytes per
 # invocation would only re-measure the write.
-_WARC_FIXTURE_DIRS: dict[str, str] = {}
-
-
-def _memo_tmpdir(cache: dict[str, str], key: str, prefix: str,
-                 populate=None) -> str:
-    """Per-(process, key) temp dir, removed at interpreter exit —
-    the one memoization shape every on-disk fixture/table/checkpoint
-    in this module shares (review-found: five hand-rolled copies).
-    ``populate(path)``, when given, runs BEFORE the path is cached and
-    a failure discards the dir — a half-built fixture must never
-    poison the process-lifetime cache (review-found: caching first
-    meant one build error served a partial corpus to every later
-    query). Dirs without a populate step cache immediately; their
-    consumers (manifest merges, stream checkpoints) are idempotent by
-    design."""
-    import atexit
-    import shutil
-    import tempfile
-
-    path = cache.get(key)
-    if path is not None:
-        return path
-    path = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    if populate is not None:
-        try:
-            populate(path)
-        except BaseException:
-            shutil.rmtree(path, ignore_errors=True)
-            raise
-    cache[key] = path
-    return path
-
-
 def _warc_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     import os
 
@@ -185,8 +152,7 @@ def _warc_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
             with open(os.path.join(path, name), "wb") as f:
                 f.write(blob)
 
-    return _memo_tmpdir(_WARC_FIXTURE_DIRS, sf_dir, "warc_fixture_",
-                        populate=build)
+    return scratch_dir("warc_fixture_", key=sf_dir, populate=build)
 
 
 @register(
@@ -377,9 +343,6 @@ def _corpus_site() -> dict:
     }
 
 
-_CORPUS_TABLE_DIRS: dict[str, str] = {}
-
-
 # survivors of the fixture pipeline, derived in the oracle from the
 # same prose constants + the StubJudge score formula (the fixture is
 # sf-independent, so the expected rows are exact constants — the crawl
@@ -477,7 +440,7 @@ def pipeline_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the landed table IS the result. One table dir per process
     # (removed at exit); the merge is idempotent by key, so re-runs
     # converge to the same three rows.
-    d = _memo_tmpdir(_CORPUS_TABLE_DIRS, "fixture", "corpus_pages_")
+    d = scratch_dir("corpus_pages_", key="fixture")
     batch = keeper.select(
         "url", "main_content", "score", key_bucket("url", 4).alias("bucket"))
     merge_into_bucketed(spark, d, batch, key="url")
@@ -519,10 +482,6 @@ def curation_llm_judge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- WARC-headed corpus pipeline (the 100-TB front door, end-to-end) -------
-
-_WARC_TABLE_DIRS: dict[str, str] = {}
-
-
 @register(
     "pipeline_warc_corpus_e2e",
     oracle=f"""
@@ -596,7 +555,7 @@ def pipeline_warc_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # MERGE into a bucketed pages table (per-process, per-SF dir —
     # idempotent by key, so re-runs converge) and read the table back:
     # the LANDED table is the result
-    d = _memo_tmpdir(_WARC_TABLE_DIRS, sf_dir, "warc_corpus_pages_")
+    d = scratch_dir("warc_corpus_pages_", key=sf_dir)
     batch = keeper.select(
         "url", "main_content", "score", key_bucket("url", 4).alias("bucket"))
     merge_into_bucketed(spark, d, batch, key="url")
@@ -610,10 +569,6 @@ def pipeline_warc_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # checkpoint live together — re-running the query resumes the SAME
 # stream (no new files → no batches) and the idempotent merge keeps
 # the landed table converged, which is the exactly-once story
-_WARC_STREAM_TBLS: dict[str, str] = {}
-_WARC_STREAM_CKPTS: dict[str, str] = {}
-
-
 @register(
     "streaming_warc_ingest_e2e",
     oracle=f"""
@@ -649,8 +604,8 @@ def streaming_warc_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawler_spark.streaming.ingest_stream import read_pages_table
 
     src = _warc_fixture_dir(spark, sf_dir)
-    tbl = _memo_tmpdir(_WARC_STREAM_TBLS, sf_dir, "warc_stream_tbl_")
-    ckpt = _memo_tmpdir(_WARC_STREAM_CKPTS, sf_dir, "warc_stream_ckpt_")
+    tbl = scratch_dir("warc_stream_tbl_", key=sf_dir)
+    ckpt = scratch_dir("warc_stream_ckpt_", key=sf_dir)
 
     def sink(batch: DataFrame, _id: int) -> None:
         recs = read_warc_blobs(batch.select("content"), "content")
@@ -698,8 +653,6 @@ def streaming_warc_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- WARC export sink (interchange OUT) ------------------------------------
 
-_WARC_SINK_DIRS: dict[str, str] = {}
-
 
 @register(
     "sink_warc_roundtrip",
@@ -722,8 +675,6 @@ def sink_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     or mis-frames — or that the ranged reader then loses — is a
     row-count/hash mismatch. The manifest collect that runs the
     export is bounded by partition count (8 here)."""
-    import os
-
     from crawler_spark.sources.warc import (
         read_warc_files_ranged, write_warc_files,
     )
@@ -733,11 +684,9 @@ def sink_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "source", "text")
     ).select("url", F.encode("text", "utf-8").alias("body"))
 
-    d = _memo_tmpdir(_WARC_SINK_DIRS, sf_dir, "warc_sink_")
-    # fresh segment set per run: the export overwrites by partition id,
-    # so stale files from an earlier layout must not survive
-    for name in os.listdir(d):
-        os.unlink(os.path.join(d, name))
+    # a fresh directory per run: no stale segment from an earlier
+    # layout can survive into the read-back
+    d = scratch_dir("warc_sink_")
 
     manifest = write_warc_files(docs.repartition(8), d)
     manifest.count()  # run the export (one manifest row per partition)

@@ -19,6 +19,7 @@ from crawler_spark.functions.embedding import DEFAULT_DIMS, StubEmbedder, normal
 from crawler_spark.operators.similarity import cosine_pairs_exact, knn_topk
 from crawler_spark.plans.oracle_pins import pin_kwargs as _PINS_KW
 from crawler_spark.plans.registry import register
+from crawler_spark.session import scratch_dir
 
 _EMB = StubEmbedder(DEFAULT_DIMS)
 QUERY_TEXT = "fast hash join merge"
@@ -171,30 +172,16 @@ def o3_knn_topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- O3 serving shape: precomputed banded index + partition-pruned probe --
-def _ann_index_path(sf_dir: str) -> str:
-    """Deterministic per-sf index location (params pinned in the name so
-    a knob change can't probe a stale index)."""
-    import os
-
-    base = os.path.basename(os.path.normpath(sf_dir))
-    return f"/tmp/crawler_spark_ann_index/{base}_p16_b4_s42"
-
-
 def _ensure_ann_index(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
+    """The banded ANN index over ``sf_dir``'s embeddings, built once per
+    process."""
     from crawler_spark.operators.similarity import build_banded_index
     from crawler_spark.sources import load_table
 
-    path = _ann_index_path(sf_dir)
-    # _SUCCESS gates reuse: a crashed partial write leaves part-files but
-    # no marker, and probing those would silently drop candidates.
-    if not os.path.isfile(os.path.join(path, "_SUCCESS")):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         build_banded_index(load_table(spark, sf_dir, "embeddings"), path)
-    return path
+
+    return scratch_dir("ann_banded_", key=sf_dir, populate=build)
 
 
 @register(
@@ -209,11 +196,12 @@ def knn_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost the per-query path amortizes at 100 TB. Returns per-partition
     row counts so the bucket distribution is inspectable (skewed buckets
     → raise num_planes or salt)."""
-    import shutil
+    from crawler_spark.operators.similarity import build_banded_index
+    from crawler_spark.sources import load_table
 
-    path = _ann_index_path(sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    _ensure_ann_index(spark, sf_dir)
+    # a fresh build, so the query prices the build, not the process's index
+    path = scratch_dir("ann_banded_")
+    build_banded_index(load_table(spark, sf_dir, "embeddings"), path)
     return (
         spark.read.parquet(path)
         .groupBy("band", "bucket").count()
@@ -243,59 +231,38 @@ _IVF_CENTROIDS: dict[str, list[list[float]]] = {}
 def _ensure_ivf_centroids(
     spark: SparkSession, sf_dir: str
 ) -> list[list[float]]:
-    """Train (or load) JUST the k-means coarse quantizer for ``sf_dir``
-    — deterministic (seeded sample), cached as JSON. Split from
+    """Train JUST the k-means coarse quantizer for ``sf_dir`` —
+    deterministic (seeded sample), once per process. Split from
     ``_ensure_ivf_index`` because the centroid-only consumers
     (``dedup_semantic``'s cluster assignment) shouldn't pay for the
     inverted-list parquet build they never read."""
-    import json
-    import os
-
     from crawler_spark.operators.similarity import train_ivf_centroids
     from crawler_spark.sources import load_table
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    cent_file = (
-        f"/tmp/crawler_spark_ann_index/{base}_ivf_c16_s42.centroids.json"
-    )
-    if cent_file not in _IVF_CENTROIDS:
-        if os.path.isfile(cent_file):
-            with open(cent_file) as f:
-                _IVF_CENTROIDS[cent_file] = json.load(f)
-        else:
-            emb = load_table(spark, sf_dir, "embeddings")
-            centroids = train_ivf_centroids(emb, n_centroids=16)
-            os.makedirs(os.path.dirname(cent_file), exist_ok=True)
-            tmp = cent_file + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(centroids, f)
-            os.replace(tmp, cent_file)
-            _IVF_CENTROIDS[cent_file] = centroids
-    return _IVF_CENTROIDS[cent_file]
+    if sf_dir not in _IVF_CENTROIDS:
+        _IVF_CENTROIDS[sf_dir] = train_ivf_centroids(
+            load_table(spark, sf_dir, "embeddings"), n_centroids=16)
+    return _IVF_CENTROIDS[sf_dir]
 
 
 def _ensure_ivf_index(
     spark: SparkSession, sf_dir: str, payload_cols: tuple[str, ...] = ()
 ) -> tuple[str, list[list[float]]]:
-    import os
-
+    """The IVF index over ``sf_dir``'s embeddings (with ``payload_cols``
+    stored beside each vector), built once per process."""
     from crawler_spark.operators.similarity import build_ivf_index
     from crawler_spark.sources import load_table
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    suffix = ("_" + "_".join(payload_cols)) if payload_cols else ""
-    path = f"/tmp/crawler_spark_ann_index/{base}_ivf_c16_s42{suffix}"
     # the shared quantizer: all payload variants index against the SAME
     # centroids (trained once, cached), so lists are comparable across
     # variants and the train cost is paid exactly once per sf_dir
     centroids = _ensure_ivf_centroids(spark, sf_dir)
-    if os.path.isfile(os.path.join(path, "_SUCCESS")):
-        return path, centroids
-    import shutil
 
-    shutil.rmtree(path, ignore_errors=True)
-    emb = load_table(spark, sf_dir, "embeddings")
-    build_ivf_index(emb, path, centroids, payload_cols=list(payload_cols))
+    def build(path: str) -> None:
+        build_ivf_index(load_table(spark, sf_dir, "embeddings"), path,
+                        centroids, payload_cols=list(payload_cols))
+
+    path = scratch_dir("ann_ivf_", key=(sf_dir, payload_cols), populate=build)
     return path, centroids
 
 
@@ -330,7 +297,6 @@ def knn_topk_ivf_refined_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     executors). The scale path when a 10k sample under-represents a
     100 TB distribution; same serving plan as knn_topk_ivf."""
     import shutil
-    import tempfile
 
     from crawler_spark.operators.similarity import (
         build_ivf_index,
@@ -343,15 +309,14 @@ def knn_topk_ivf_refined_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     seeded = train_ivf_centroids(emb, n_centroids=16)
     refined = refine_centroids(emb, seeded, iters=2)
-    root = tempfile.mkdtemp(prefix="ivf_refined_")
-    path = root + "/index"
+    path = scratch_dir("ivf_refined_")
     try:
         build_ivf_index(emb, path, refined)
         top = knn_topk_ivf(spark, path, refined, QUERY_VEC, k=5, nprobe=4)
         out = top.select("vec_id", F.round("distance", 6).alias("distance"))
-        out = spark.createDataFrame(out.collect(), out.schema)  # outlive tmpdir
+        out = spark.createDataFrame(out.collect(), out.schema)  # outlive path
     finally:
-        shutil.rmtree(root, ignore_errors=True)  # the mkdtemp root, not /index
+        shutil.rmtree(path, ignore_errors=True)
     return out
 
 
@@ -581,6 +546,18 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_CODEBOOKS: dict[str, list[list[list[float]]]] = {}
 
 
+def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
+    """The 8-subspace, 32-code PQ codebooks for ``sf_dir``'s embeddings,
+    trained once per process (seeded, deterministic)."""
+    from crawler_spark.operators.similarity import train_pq_codebooks
+    from crawler_spark.sources import load_table
+
+    if sf_dir not in _PQ_CODEBOOKS:
+        _PQ_CODEBOOKS[sf_dir] = train_pq_codebooks(
+            load_table(spark, sf_dir, "embeddings"), n_subspaces=8, n_codes=32)
+    return _PQ_CODEBOOKS[sf_dir]
+
+
 # seeded-deterministic, partition-independent — sf0.01
 # REGRESSION pin (tools/pin_oracles.py); was: rows-only: PQ/ADC approximate top-k
 @register("o3_knn_topk_pq", **_PINS_KW("o3_knn_topk_pq"))
@@ -595,14 +572,11 @@ def o3_knn_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     worst case), hence 32 codes and a generous re-rank here; clustered
     real embeddings hit the same recall with less. Compose with the
     IVF coarse quantizer for IVFPQ at full scale."""
-    from crawler_spark.operators.similarity import knn_topk_pq, train_pq_codebooks
+    from crawler_spark.operators.similarity import knn_topk_pq
     from crawler_spark.sources import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    if sf_dir not in _PQ_CODEBOOKS:
-        _PQ_CODEBOOKS[sf_dir] = train_pq_codebooks(
-            emb, n_subspaces=8, n_codes=32)
-    top = knn_topk_pq(emb, _PQ_CODEBOOKS[sf_dir], QUERY_VEC, k=5,
+    top = knn_topk_pq(emb, _pq_codebooks(spark, sf_dir), QUERY_VEC, k=5,
                       rerank_factor=20)
     return top.select("vec_id", F.round("distance", 6).alias("distance"))
 
@@ -654,15 +628,11 @@ def knn_topk_ivfpq_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     a codes-only pass, exact re-rank last. The multiplicative pruning
     (~nprobe/C of rows × ~m bytes/vector) is THE billion-vector
     serving shape; recall vs exact pinned in tests."""
-    from crawler_spark.operators.similarity import knn_topk_ivfpq, train_pq_codebooks
-    from crawler_spark.sources import load_table
+    from crawler_spark.operators.similarity import knn_topk_ivfpq
 
     path, centroids = _ensure_ivf_index(spark, sf_dir)
-    if sf_dir not in _PQ_CODEBOOKS:
-        _PQ_CODEBOOKS[sf_dir] = train_pq_codebooks(
-            load_table(spark, sf_dir, "embeddings"), n_subspaces=8, n_codes=32)
     top = knn_topk_ivfpq(
-        spark, path, centroids, _PQ_CODEBOOKS[sf_dir], QUERY_VEC,
+        spark, path, centroids, _pq_codebooks(spark, sf_dir), QUERY_VEC,
         k=5, nprobe=8, rerank_factor=20,
     )
     return top.select("vec_id", F.round("distance", 6).alias("distance"))
@@ -683,10 +653,10 @@ def knn_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     append_banded_index), probe and see old+new together. The appended
     vector is the query itself, so the probe returning it at distance
     -1 proves the appended files are live. The base index comes from
-    ``_ensure_ann_index`` (the one ``knn_index_build`` already prices)
-    and is FILE-COPIED to a scratch dir each run — repeated driver
-    runs stay idempotent without re-paying the build job."""
-    import os
+    ``_ensure_ann_index`` (the build ``knn_index_build`` prices, made
+    once per process) and is FILE-COPIED to a fresh scratch dir each
+    run — repeated driver runs stay idempotent without re-paying the
+    build job."""
     import shutil
 
     from crawler_spark.operators.similarity import (
@@ -694,11 +664,8 @@ def knn_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         knn_topk_precomputed,
     )
 
-    base_idx = _ensure_ann_index(spark, sf_dir)
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = f"/tmp/crawler_spark_ann_index/{base}_append_scratch"
-    shutil.rmtree(path, ignore_errors=True)
-    shutil.copytree(base_idx, path)
+    path = scratch_dir("ann_append_")
+    shutil.copytree(_ensure_ann_index(spark, sf_dir), path, dirs_exist_ok=True)
     new = spark.createDataFrame(
         [(1_000_000, [float(x) for x in QUERY_VEC])],
         "vec_id long, embedding array<double>",
@@ -710,34 +677,19 @@ def knn_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- IVFPQ materialized serving index (build + probe split) ---------------
 def _ensure_ivfpq_index(spark: SparkSession, sf_dir: str):
-    import json
-    import os
-    import shutil
-
-    from crawler_spark.operators.similarity import (
-        build_ivfpq_index,
-        train_pq_codebooks,
-    )
+    """The IVFPQ index over ``sf_dir``'s embeddings with its centroids
+    and codebooks, built once per process."""
+    from crawler_spark.operators.similarity import build_ivfpq_index
     from crawler_spark.sources import load_table
 
-    path, centroids = _ensure_ivf_index(spark, sf_dir)
-    base = os.path.basename(os.path.normpath(sf_dir))
-    pq_path = f"/tmp/crawler_spark_ann_index/{base}_ivfpq_c16_m8_k32_s42"
-    book_file = pq_path + ".codebooks.json"
-    if sf_dir not in _PQ_CODEBOOKS:
-        _PQ_CODEBOOKS[sf_dir] = train_pq_codebooks(
-            load_table(spark, sf_dir, "embeddings"), n_subspaces=8, n_codes=32)
-    books = _PQ_CODEBOOKS[sf_dir]
-    if os.path.isfile(book_file) and os.path.isfile(
-            os.path.join(pq_path, "_SUCCESS")):
-        with open(book_file) as f:
-            if json.load(f) == books:
-                return pq_path, centroids, books
-    shutil.rmtree(pq_path, ignore_errors=True)
-    build_ivfpq_index(
-        load_table(spark, sf_dir, "embeddings"), pq_path, centroids, books)
-    with open(book_file, "w") as f:
-        json.dump(books, f)
+    centroids = _ensure_ivf_centroids(spark, sf_dir)
+    books = _pq_codebooks(spark, sf_dir)
+
+    def build(path: str) -> None:
+        build_ivfpq_index(
+            load_table(spark, sf_dir, "embeddings"), path, centroids, books)
+
+    pq_path = scratch_dir("ann_ivfpq_", key=sf_dir, populate=build)
     return pq_path, centroids, books
 
 
@@ -754,16 +706,14 @@ def ivfpq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     list size distribution is the knob check (empty/huge lists → bad
     centroids). One-off cost the probe amortizes, exactly like
     `knn_index_build` for the banded family."""
-    import shutil
-
+    from crawler_spark.operators.similarity import build_ivfpq_index
     from crawler_spark.sources import load_table
 
-    # force a fresh build so the query prices the build, not the cache
-    import os
-    base = os.path.basename(os.path.normpath(sf_dir))
-    shutil.rmtree(f"/tmp/crawler_spark_ann_index/{base}_ivfpq_c16_m8_k32_s42",
-                  ignore_errors=True)
-    pq_path, _, _ = _ensure_ivfpq_index(spark, sf_dir)
+    # a fresh build, so the query prices the build, not the process's index
+    pq_path = scratch_dir("ann_ivfpq_")
+    build_ivfpq_index(load_table(spark, sf_dir, "embeddings"), pq_path,
+                      _ensure_ivf_centroids(spark, sf_dir),
+                      _pq_codebooks(spark, sf_dir))
     back = spark.read.parquet(pq_path)
     return (
         back.groupBy("list_id").agg(F.count(F.lit(1)).alias("n_vectors"))
@@ -932,10 +882,6 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     FAISS add vs re-train split). Earlier-arrival-wins is the
     SEMANTICS of ingest dedup; the fixed wave order is what makes this
     registrable and pinnable where a free-running stream would not be."""
-    import atexit
-    import shutil
-    import tempfile
-
     from crawler_spark.operators.similarity import semantic_dedup_ingest_step
     from crawler_spark.sources import load_table
 
@@ -943,8 +889,7 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # fresh per construction: the step APPENDS — a memoized dir would
     # double-append when the same process constructs the query twice
-    idx = tempfile.mkdtemp(prefix="semdedup_incr_idx_")
-    atexit.register(shutil.rmtree, idx, ignore_errors=True)
+    idx = scratch_dir("semdedup_incr_idx_")
 
     # the wave loop runs MANY small jobs (closure rounds, appends,
     # probe collects) whose shuffles are a handful of rows each —

@@ -14,12 +14,19 @@ Confs that change after the session is built change only here: through
 ``stream_conf``) — scoped, restored on every exit, and single-threaded
 per session by enforcement — or through ``set_read_confs``, the fixed
 read-side values a source sets before it reads.
+
+Scratch directories (fixtures, indexes, tables, stream checkpoints)
+come only from here too: ``scratch_dir``, under one per-process root
+removed at interpreter exit.
 """
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import os
+import shutil
+import tempfile
 import threading
 
 from pyspark.sql import SparkSession
@@ -202,6 +209,51 @@ def set_read_confs(spark: SparkSession) -> None:
     are session-wide and the same for every reader)."""
     for k, v in READ_CONFS.items():
         spark.conf.set(k, v)
+
+
+_SCRATCH_LOCK = threading.Lock()
+_SCRATCH_ROOT: str | None = None
+_SCRATCH_DIRS: dict[tuple[str, object], str] = {}
+
+
+def scratch_dir(prefix: str, key=None, populate=None) -> str:
+    """A new directory named ``<prefix>…`` under this process's scratch
+    root — THE one place the engine makes a directory of its own.
+
+    The root is ``<SPARK_GRAFT_SCRATCH or /tmp/crawler_spark_scratch>/
+    <pid>-<random>``, made on first use and removed at interpreter
+    exit, so nothing is shared with another process and nothing
+    outlives this one (a killed process leaves its root behind).
+
+    With ``key=None`` every call returns a fresh directory. With a
+    (hashable) ``key`` the directory is memoized per ``(prefix, key)``
+    for the process's life; ``populate(path)``, when given, runs
+    BEFORE the path is cached, and if it raises the directory is
+    removed and nothing cached — a half-built fixture never serves a
+    later call. Two threads racing on one new key may both populate;
+    both get the first path cached."""
+    global _SCRATCH_ROOT
+    memo = (prefix, key)
+    if key is not None and memo in _SCRATCH_DIRS:
+        return _SCRATCH_DIRS[memo]
+    with _SCRATCH_LOCK:
+        if _SCRATCH_ROOT is None:
+            base = os.environ.get("SPARK_GRAFT_SCRATCH",
+                                  "/tmp/crawler_spark_scratch")
+            os.makedirs(base, exist_ok=True)
+            _SCRATCH_ROOT = tempfile.mkdtemp(prefix=f"{os.getpid()}-",
+                                             dir=base)
+            atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+        path = tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
+    if populate is not None:
+        try:
+            populate(path)
+        except BaseException:
+            shutil.rmtree(path, ignore_errors=True)
+            raise
+    if key is not None:
+        path = _SCRATCH_DIRS.setdefault(memo, path)
+    return path
 
 
 # generated classes the driver JVM keeps compiled (see get_spark)

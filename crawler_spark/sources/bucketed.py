@@ -15,9 +15,9 @@ This is Spark's answer to the reference's Postgres btree indexes
 `idx_jobs_status` exist so lookups and joins don't rescan);
 on a cluster it is also how you amortize shuffles across a whole DAG
 of downstream queries. Tables are written as EXTERNAL tables (explicit
-path under a scratch dir) registered in the session catalog — the
-files survive across sessions, the catalog entry is re-created per
-session, and ``mode('overwrite')`` keeps the build idempotent.
+path under a ``session.scratch_dir``) registered in the session
+catalog — the files live as long as the process, and each session that
+asks for a table writes it once.
 """
 
 from __future__ import annotations
@@ -27,12 +27,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from crawler_spark.session import set_read_confs
+from crawler_spark.session import scratch_dir, set_read_confs
 from crawler_spark.sources.tables import load_table
-
-SCRATCH_DIR = os.environ.get(
-    "SPARK_GRAFT_SCRATCH", "/tmp/crawler_spark_scratch"
-)
 
 
 def _table_ident(sf_dir: str, table: str, key: str, num_buckets: int) -> str:
@@ -58,7 +54,7 @@ def ensure_bucketed(
     ident = _table_ident(sf_dir, table, key, num_buckets)
     if spark.catalog.tableExists(ident):
         return ident
-    path = os.path.join(SCRATCH_DIR, ident)
+    path = scratch_dir(ident + "_")
     (
         load_table(spark, sf_dir, table)
         .repartition(num_buckets, key)

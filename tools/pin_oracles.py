@@ -349,14 +349,9 @@ def main() -> None:
         # tests/test_dedup.py)
         "dedup_semantic_incremental",
     ]
-    # Pins must record FRESH index behavior: the IVF/banded/PQ caches
-    # persist under /tmp across processes, so a code change to any
-    # index builder would otherwise be pinned against the STALE
-    # on-disk artifacts and the regression gate would certify the old
-    # behavior (review-found).
-    import shutil
-
-    shutil.rmtree("/tmp/crawler_spark_ann_index", ignore_errors=True)
+    # pins record FRESH index behavior: the IVF/banded/PQ indexes are
+    # built in this process's scratch root (session.scratch_dir), never
+    # read from another process's build
     for name in regression_names:
         pins[name] = regression_pin(name)
 

@@ -65,9 +65,11 @@ def main() -> None:
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     rows = []
-    for name in names:
+    for i, name in enumerate(names):
         fn = registry.QUERIES[name]
-        group = f"profile_{name}"
+        # one group per run: a repeated name must not count the jobs
+        # of its earlier runs
+        group = f"profile_{i}_{name}"
         sc.setJobGroup(group, name)
         c0 = codegen_compile_count(spark)
         t0 = time.perf_counter()
